@@ -12,11 +12,14 @@ or a full scan:
   on every query. `tests/test_bucketed_join.py` asserts the plan is
   exchange-free.
 * ``fs_point_lookup`` — the reference's serving path (GET /can{feature},
-  /root/reference/app.py:63-79): batch grants -> sharded keyed store
-  (streaming/sharded_store.py, incremental MERGE) -> lookup that hashes
-  the keys to their shards, opens only those shard directories, and
-  pushes the IN-list into the parquet scan. Write amplification and
-  read cost both stay proportional to keys touched, not table size.
+  the reference's app.py:63-79) as a batch read: batch grants -> sharded
+  keyed store (streaming/sharded_store.py, incremental MERGE) -> a
+  DataFrame that hashes the keys to their shards on the driver, opens
+  only those shard directories, and pushes the IN-list into the parquet
+  scan. Write amplification and read cost both stay proportional to
+  keys touched, not table size. The per-request lookup itself
+  (``has_grant`` -> ``sharded_store.point_lookup``) reads the same
+  shard driver-side with Arrow and launches no Spark job.
 """
 
 from __future__ import annotations
@@ -211,13 +214,11 @@ def fs_point_lookup(spark, sf_dir):
         )
         sharded_store.upsert(grants, store, ("user_id", "feature"), "user_id")
         _commit_staging("store", sf_dir, root)
-    # Serving read: hash the lookup keys to their shards, open ONLY those
+    # Serving read: hash the lookup keys to their shards on the driver
+    # (the same XXH64 as ``shard_of``, no Spark job), open ONLY those
     # shard directories, then push the IN-list into the parquet scan.
     shards = {
-        int(r["s"])
-        for r in spark.createDataFrame([(u,) for u in LOOKUP_USERS], "user_id long")
-        .select(sharded_store.shard_of("user_id").alias("s"))
-        .collect()
+        sharded_store.xxhash64_long(u) % sharded_store.N_SHARDS for u in LOOKUP_USERS
     }
     served = sharded_store.read_store(spark, store, shards=shards)
     return served.filter(F.col("user_id").isin(*LOOKUP_USERS)).select(

@@ -13,7 +13,9 @@ Two storage layers live behind this module:
 * the SHARDED store (sharded_store.py) — what ``run_grants_pipeline``
   writes and ``has_grant``/``serve_has_grant`` read: incremental MERGE
   (manifest log, touched-shard rewrites, retention/time travel), the
-  Delta/Iceberg-shaped path that survives 100 TB;
+  Delta/Iceberg-shaped path that survives 100 TB. Lookups read the
+  key's rows of one shard driver-side with Arrow, so serving launches
+  no Spark job;
 * a plain versioned-parquet store (``upsert_grants``/``read_grants``
   below, ``v0``, ``v1``, ... + a ``_LATEST`` pointer written last) —
   the minimal whole-table MERGE kept as the simple reference
@@ -206,22 +208,18 @@ def has_grant(
     circuit_open: bool = False,
 ) -> bool:
     """Point lookup (A15, app.py:63-79) against the SHARDED grants store
-    the streaming pipeline maintains — hashes the key to one shard and
-    reads only that directory. Open circuit => fail-open allow
-    (services/user_feature.py:49-52); unknown user => default True
-    (services/user_feature.py:75-79)."""
+    the streaming pipeline maintains: a dict lookup over the user's rows
+    from ``sharded_store.point_lookup``, which hashes the key to one
+    shard of the newest committed version and reads the key's rows
+    driver-side with Arrow. Launches no Spark job; ``spark`` is accepted
+    for callers that pass it. Open circuit => fail-open allow
+    (services/user_feature.py:49-52); unknown user or feature => default
+    True (services/user_feature.py:75-79)."""
     if circuit_open:
         return True
-    rows = sharded_store.point_lookup(spark, grants_path, "user_id", user_id)
-    if rows is None:
-        return True
-    row = (
-        rows.filter(F.col("feature") == feature)
-        .select("has_grant")
-        .limit(1)
-        .collect()
-    )
-    return bool(row[0][0]) if row else True
+    rows = sharded_store.point_lookup(grants_path, "user_id", user_id)
+    grants = {r["feature"]: r["has_grant"] for r in rows}
+    return bool(grants.get(feature, True))
 
 
 def latest_circuit_open(

@@ -15,8 +15,9 @@ This is exactly the shape of Delta/Iceberg MERGE (log = manifest, file
 group = shard): write amplification proportional to data touched, not
 table size. Reference parity: the per-key dict update of
 /root/reference/services/user_feature.py:32-44, made durable and
-incremental. Point lookups (app.py:63-79) hash the key to one shard and
-read one directory — the poor man's primary-key index.
+incremental. Point lookups (app.py:63-79) hash the key to one shard on
+the driver and read only that key's rows of that one directory with
+Arrow — no Spark job: the poor man's primary-key index.
 
 Compaction: after many incremental upserts the manifest references many
 versions (each a directory). When the live-version count exceeds
@@ -27,12 +28,15 @@ Delta's OPTIMIZE. Unreferenced versions are deleted after commit.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 N_SHARDS = 16
 SHARD_COL = "__shard"
@@ -93,10 +97,9 @@ def shard_of(key_col: str, n_shards: int = N_SHARDS) -> F.Column:
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int")
 
 
-# --- driver-side XXH64, bit-identical to Spark's xxhash64 on BIGINT ---
-# (XXH64 is public domain; this is the fixed-width 8-byte lane path with
-# Spark's default seed 42.) Lets a point lookup compute its shard without
-# launching a Spark job — the serving path is then one pruned read.
+# --- driver-side XXH64, bit-identical to Spark's xxhash64 ---
+# (XXH64 is public domain; Spark's default seed is 42.) Lets a point
+# lookup compute its shard without launching a Spark job.
 _M64 = (1 << 64) - 1
 _P1, _P2, _P3, _P4, _P5 = (
     0x9E3779B185EBCA87,
@@ -111,21 +114,70 @@ def _rotl64(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M64
 
 
-def xxhash64_long(value: int, seed: int = 42) -> int:
-    """Spark-compatible xxhash64 of one BIGINT (signed result).
-    Verified bit-identical to ``F.xxhash64(col)`` for LongType in
-    tests/test_sharded_store.py."""
-    l = value & _M64
-    acc = (seed + _P5 + 8) & _M64
-    k1 = _rotl64((l * _P2) & _M64, 31)
-    acc ^= (k1 * _P1) & _M64
-    acc = (_rotl64(acc, 27) * _P1 + _P4) & _M64
+def _round(acc: int, lane: int) -> int:
+    acc = (acc + lane * _P2) & _M64
+    return (_rotl64(acc, 31) * _P1) & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` with little-endian lanes, as a signed long:
+    Spark's ``XXH64.hashUnsafeBytes`` (its ``hashLong`` is the same
+    function over the long's 8 bytes)."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v = [
+            (seed + _P1 + _P2) & _M64,
+            (seed + _P2) & _M64,
+            seed & _M64,
+            (seed - _P1) & _M64,
+        ]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _round(v[j], lane)
+            i += 32
+        acc = (
+            _rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+        ) & _M64
+        for lane in v:
+            acc ^= _round(0, lane)
+            acc = (acc * _P1 + _P4) & _M64
+    else:
+        acc = (seed + _P5) & _M64
+    acc = (acc + n) & _M64
+    while i + 8 <= n:
+        acc ^= _round(0, int.from_bytes(data[i : i + 8], "little"))
+        acc = (_rotl64(acc, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        acc ^= (int.from_bytes(data[i : i + 4], "little") * _P1) & _M64
+        acc = (_rotl64(acc, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        acc ^= (data[i] * _P5) & _M64
+        acc = (_rotl64(acc, 11) * _P1) & _M64
+        i += 1
     acc ^= acc >> 33
     acc = (acc * _P2) & _M64
     acc ^= acc >> 29
     acc = (acc * _P3) & _M64
     acc ^= acc >> 32
     return acc - (1 << 64) if acc >= (1 << 63) else acc
+
+
+def xxhash64_long(value: int, seed: int = 42) -> int:
+    """Spark-compatible xxhash64 of one BIGINT (signed result).
+    Verified bit-identical to ``F.xxhash64(col)`` for LongType in
+    tests/test_sharded_store.py."""
+    return _xxh64((value & _M64).to_bytes(8, "little"), seed)
+
+
+def xxhash64_utf8(value: str, seed: int = 42) -> int:
+    """Spark-compatible xxhash64 of one STRING (its UTF-8 bytes).
+    Verified bit-identical to ``F.xxhash64(col)`` for StringType in
+    tests/test_sharded_store.py."""
+    return _xxh64(value.encode("utf-8"), seed)
 
 
 def read_store(
@@ -291,44 +343,85 @@ def upsert(
                 pass
 
 
+def _shard_of_key(key_value, n_shards: int) -> int:
+    """The shard ``shard_of`` put ``key_value`` in: ``xxhash64`` hashes
+    by type, so a Python str hashes as a Spark string and an integer as
+    a Spark bigint. Other keys raise ``TypeError``."""
+    if isinstance(key_value, str):
+        return xxhash64_utf8(key_value) % n_shards
+    if not isinstance(key_value, bool):
+        try:
+            return xxhash64_long(operator.index(key_value)) % n_shards
+        except TypeError:
+            pass
+    raise TypeError(
+        f"point_lookup supports bigint and string shard keys; got {key_value!r}"
+    )
+
+
+def _open_shard(shard_dir: str, shard_key: str, key_value) -> ds.Dataset:
+    """The shard directory as a dataset, once its stored key type is
+    the one ``key_value`` was hashed as. A directory emptied by a
+    concurrent GC has no such column and raises ``KeyError``."""
+    dataset = ds.dataset(shard_dir, format="parquet")
+    key_type = dataset.schema.field(shard_key).type
+    if key_type != (pa.string() if isinstance(key_value, str) else pa.int64()):
+        raise TypeError(
+            f"point_lookup supports bigint and string shard keys; "
+            f"got {key_value!r} for a {key_type} key"
+        )
+    return dataset
+
+
+def _lookup_at(
+    path: str, version: int, shard_key: str, key_value, n_shards: int
+) -> list[dict]:
+    with open(_manifest_path(path, version)) as f:
+        manifest = {int(k): int(v) for k, v in json.load(f)["shards"].items()}
+    if not manifest:
+        return []
+    shard = _shard_of_key(key_value, n_shards)
+    # A shard never written, or emptied by delete_keys, holds no rows;
+    # another shard's footer still checks the key type.
+    read = shard if shard in manifest else min(manifest)
+    shard_dir = os.path.join(_data_dir(path, manifest[read]), f"{SHARD_COL}={read}")
+    dataset = _open_shard(shard_dir, shard_key, key_value)
+    if read != shard:
+        return []
+    return dataset.to_table(filter=pc.field(shard_key) == key_value).to_pylist()
+
+
 def point_lookup(
-    spark: SparkSession,
     path: str,
     shard_key: str,
     key_value,
     n_shards: int = N_SHARDS,
-) -> DataFrame | None:
-    """Rows for one key, reading exactly one shard directory.
+) -> list[dict]:
+    """Rows for one key (column -> value dicts, without ``__shard``),
+    read driver-side from one shard directory: no Spark job.
 
-    The shard must come from the SAME hash ``upsert``'s ``shard_of``
-    applied — ``xxhash64`` hashes by type, so hashing
-    ``lit(key).cast('long')`` would silently pick the wrong shard for
-    any non-bigint shard key (e.g. string user ids). Bigint keys hash
-    driver-side (``xxhash64_long``, bit-identical, zero Spark jobs —
-    the serving path is then a single pruned read); other dtypes fall
-    back to a one-row frame carrying the column's STORED dtype.
+    Every call reads ``_LATEST`` and its manifest, so it sees the newest
+    committed version. The key hashes to its shard with the SAME hash
+    ``upsert``'s ``shard_of`` applied (bigint or UTF-8 string XXH64),
+    and Arrow reads only that key's rows of the shard. A commit landing
+    during the read may GC the version being read (a missing file, or a
+    directory already emptied); ``_LATEST`` then differs from the one
+    the read started on, and the lookup starts over once on the new
+    version.
     """
-    manifest = _read_manifest(path)
-    if not manifest:
-        return None
-    any_version = next(iter(manifest.values()))
-    dtype = (
-        spark.read.parquet(_data_dir(path, any_version)).schema[shard_key].dataType
-    )
-    if isinstance(dtype, T.LongType):
-        shard = xxhash64_long(int(key_value)) % n_shards
-    else:
-        shard = (
-            spark.createDataFrame(
-                [(key_value,)], T.StructType([T.StructField(shard_key, dtype)])
-            )
-            .select(shard_of(shard_key, n_shards).alias("s"))
-            .collect()[0]["s"]
-        )
-    snap = read_store(spark, path, shards={shard})
-    if snap is None:
-        return None
-    return snap.filter(F.col(shard_key) == key_value).drop(SHARD_COL)
+    for _ in range(2):
+        version = current_version(path)
+        if version is None:
+            return []
+        try:
+            rows = _lookup_at(path, version, shard_key, key_value, n_shards)
+        except (FileNotFoundError, KeyError):
+            if current_version(path) == version:
+                raise
+            continue
+        if current_version(path) == version:
+            return rows
+    raise RuntimeError(f"{path}: a commit landed during both lookup attempts")
 
 
 def delete_keys(

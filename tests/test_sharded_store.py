@@ -96,6 +96,19 @@ def test_python_xxhash64_matches_spark(spark):
         assert ss.xxhash64_long(r.k) == r.h, r.k
 
 
+def test_python_xxhash64_utf8_matches_spark(spark):
+    """Driver-side XXH64 over UTF-8 bytes is bit-identical to F.xxhash64
+    on StringType: lengths 0-40 cross the 4-byte tail, 8-byte lane and
+    32-byte stripe boundaries; multi-byte text checks the byte encoding."""
+    vals = ["".join(chr(97 + i % 26) for i in range(n)) for n in range(41)]
+    vals += ["é", "user-7", "日本語テキスト", "Ünïcödé-" * 5, "🙂" * 9]
+    df = spark.createDataFrame([(v,) for v in vals], "k string").select(
+        "k", F.xxhash64("k").alias("h")
+    )
+    for r in df.collect():
+        assert ss.xxhash64_utf8(r.k) == r.h, r.k
+
+
 def test_point_lookup_string_key_uses_stored_dtype(spark, store):
     """Non-bigint shard keys still land on the right shard: the lookup
     hashes with the column's stored dtype (a long-cast would hash a
@@ -105,15 +118,15 @@ def test_point_lookup_string_key_uses_stored_dtype(spark, store):
         "uid string, has_grant boolean",
     )
     ss.upsert(df, store, ("uid",), "uid")
-    rows = ss.point_lookup(spark, store, "uid", "user-7").collect()
-    assert [(r.uid, r.has_grant) for r in rows] == [("user-7", False)]
+    rows = ss.point_lookup(store, "uid", "user-7")
+    assert [(r["uid"], r["has_grant"]) for r in rows] == [("user-7", False)]
 
 
 def test_point_lookup_reads_one_shard(spark, store):
     base = grants_df(spark, [(u, "purchase", u % 2 == 0) for u in range(100)])
     ss.upsert(base, store, ("user_id", "feature"), "user_id")
-    row = ss.point_lookup(spark, store, "user_id", 42).collect()
-    assert [(r.user_id, r.has_grant) for r in row] == [(42, True)]
+    row = ss.point_lookup(store, "user_id", 42)
+    assert [(r["user_id"], r["has_grant"]) for r in row] == [(42, True)]
     # Pruning: the shard-restricted read touches a strict subset.
     shard = (
         spark.range(1)
