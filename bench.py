@@ -109,12 +109,12 @@ HEADLINE = [
     # rehearsal's disk-spill find, BENCH_NOTES 8q).
     "graph_triangle_count",
     # The reference's true workload end-to-end: streaming ingest ->
-    # keyed-state aggregation -> grants upsert. ~100k events at sf0.1;
-    # wall seconds here are ~events/sec throughput vs BASELINE's 2k req/s.
+    # uuid dedup -> foreachBatch MERGE of per-user aggregate deltas (zero
+    # Python per event) -> grants upsert. ~100k events at sf0.1; wall
+    # seconds here are ~events/sec throughput vs BASELINE's 2k req/s.
     "stream_feature_grants",
-    # Same workload, all-JVM strategy: foreachBatch incremental MERGE
-    # of per-user aggregate deltas (zero Python per event) — the 100 TB
-    # scale path; same oracle as stream_feature_grants.
+    # The same function under its strategy name (one catalog function
+    # registered twice); it keeps a second sample of the same plan.
     "stream_grants_incremental_merge",
 ]
 
@@ -131,9 +131,9 @@ def main() -> None:
     by_name = {q.name: q for q in CATALOG}
     # Warm the JVM/codegen once on the cheapest query so per-query times
     # measure the plan, not first-call JIT. The streaming entry gets its
-    # own warm-up at the smallest SF: state-store + Arrow state serde
-    # paths JIT separately from the batch engine (measured ~12s of
-    # first-streaming-query overhead otherwise).
+    # own warm-up at the smallest SF: the state-store, file-source and
+    # foreachBatch paths JIT separately from the batch engine (measured
+    # ~12s of first-streaming-query overhead otherwise).
     try:
         force(by_name["q1_pricing_summary"].fn(spark, sf_dir))
     except Exception:  # noqa: BLE001 — warm-up is best-effort

@@ -49,7 +49,7 @@ from feature_store_2_spark.config import (
 # cents < 1e18 — always inside int64). Spark widens the SUM accumulator
 # to DECIMAL(28,2) automatically (~1e10 max-magnitude rows before a
 # LOUD ANSI overflow, never a wrap); values beyond the intake envelope
-# are MISSING, like NaN/Inf, on batch, both streams, and the oracle.
+# are MISSING, like NaN/Inf, on batch, the stream, and the oracle.
 _SUM_DECIMAL = "decimal(18,2)"
 
 

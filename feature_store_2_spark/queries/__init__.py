@@ -101,15 +101,13 @@ _PINNED_RESCORE: tuple[str, ...] = (
     # (CORRECTNESS_r10.json: 48/50 green + the 2 by-design rows-only)
     # and are cleared.
     #
-    # r10 verdict #1 (the streaming SUM cents contract): the Python
-    # keyed-state path now converts EACH value to cents with the same
-    # shortest-repr HALF_UP rounding as the batch plan's
-    # try_cast(DECIMAL(18,2)) before accumulating (_cents_sum,
-    # streaming/pipeline.py) — round-then-sum, slicing-independent,
-    # exact past 2^53 cents. stream_feature_grants is a staple and
-    # rescores anyway; these are the other run_grants_pipeline
-    # consumers plus the (unchanged but contract-sharing) JVM-merge
-    # twin the verdict asked rescored alongside.
+    # r10 verdict #1 (the streaming SUM cents contract): streaming SUMs
+    # convert EACH value to cents with the batch plan's
+    # try_cast(DECIMAL(18,2)) before accumulating in int64
+    # (_delta_aggregates, streaming/pipeline.py) — round-then-sum,
+    # slicing-independent, exact past 2^53 cents. stream_feature_grants
+    # is a staple and rescores anyway; these are the other grants
+    # entries sharing the contract.
     "stream_grants_multibatch",
     "stream_grants_incremental_merge",
     "stream_grant_notifications",

@@ -1,12 +1,13 @@
 """Streaming-path query entries for the driver contract.
 
 ``stream_feature_grants`` runs the REAL Structured Streaming pipeline
-(file source -> applyInPandasWithState -> foreachBatch grants store) over
-the sf_dir events and returns the resulting grants snapshot. Its oracle
-is the SAME SQL as the batch ``fs_feature_grants`` — so the correctness
-gate proves batch/stream equivalence end-to-end, not just "rows came
-out": the stateful path must reproduce the declarative pipeline exactly
-(uuid dedup, distinct sets, cent-exact sums).
+(file source -> watermarked uuid dedup -> foreachBatch aggregate-state
+MERGE + grants store) over the sf_dir events and returns the resulting
+grants snapshot. Its oracle is the SAME SQL as the batch
+``fs_feature_grants`` — so the correctness gate proves batch/stream
+equivalence end-to-end, not just "rows came out": the streaming path
+must reproduce the declarative pipeline exactly (uuid dedup, distinct
+sets, cent-exact sums).
 
 ``stream_denial_rate`` exercises the watermarked sliding-window breaker
 (A16/A17) with EXACT distinct users (r10): two chained stateful
@@ -31,7 +32,6 @@ from feature_store_2_spark.sources.tables import load_table
 from feature_store_2_spark.streaming import (
     grants_snapshot,
     read_notifications,
-    run_grants_pipeline,
     run_grants_pipeline_merge,
     streaming_denial_rate_exact,
 )
@@ -64,7 +64,8 @@ SELECT user_id, 'message' AS feature, message_grant AS has_grant FROM wide
 # r7-measured 16-partition cap by ~4 MB of backlog, i.e. every
 # rehearsal-scale run keeps the exact prior behavior. A real deployment
 # sizes this to events-per-batch / executor count instead (the
-# run_grants_pipeline doc), which the explicit parameter still allows.
+# run_grants_pipeline_merge doc), which the explicit parameter still
+# allows.
 _STREAM_STATE_BYTES_PER_PART = 256 * 1024
 _STREAM_PARTS_CAP = 16
 
@@ -145,41 +146,10 @@ def _stage_events(spark, sf_dir: str) -> str:
     return run_root
 
 
-@register(
-    "stream_feature_grants",
-    _GRANTS_ORACLE,
-    doc="END-TO-END STREAMING: stateful per-user aggregation + grants "
-    "foreachBatch, oracle-checked against the batch grants SQL",
-)
-def stream_feature_grants(spark, sf_dir):
-    root = _stage_events(spark, sf_dir)
-    run_grants_pipeline(
-        spark,
-        events_path=os.path.join(root, "events"),
-        grants_path=os.path.join(root, "grants"),
-        notifications_path=os.path.join(root, "notifications"),
-        checkpoint_path=os.path.join(root, "checkpoint"),
-        # Two stateful ops over ~100k events/batch: per-partition
-        # state-store commit overhead dominates once partitions are
-        # thin (see run_grants_pipeline doc and _stream_parts) — count
-        # derived from the staged backlog size, capped at the
-        # r7-measured 16.
-        shuffle_partitions=_stream_parts(os.path.join(root, "events")),
-    )
-    return grants_snapshot(spark, os.path.join(root, "grants"))
-
-
-@register(
-    "stream_grants_incremental_merge",
-    _GRANTS_ORACLE,
-    doc="END-TO-END STREAMING, all-JVM strategy: the same grants "
-    "workload via foreachBatch incremental MERGE (micro-batch "
-    "conditional-agg deltas merged into a sharded aggregate-state "
-    "store — counters add, sets union, cent sums add). Zero Python per "
-    "event; same oracle as stream_feature_grants proves the two "
-    "stateful strategies equivalent",
-)
-def stream_grants_incremental_merge(spark, sf_dir):
+def _run_grants(spark, sf_dir: str) -> str:
+    """Stage sf_dir's events, run the streaming grants pipeline over them
+    in one availableNow catch-up, and return the run root (``grants/``,
+    ``notifications/`` and ``checkpoint/`` live under it)."""
     root = _stage_events(spark, sf_dir)
     run_grants_pipeline_merge(
         spark,
@@ -187,8 +157,35 @@ def stream_grants_incremental_merge(spark, sf_dir):
         grants_path=os.path.join(root, "grants"),
         notifications_path=os.path.join(root, "notifications"),
         checkpoint_path=os.path.join(root, "checkpoint"),
+        # One stateful op (uuid dedup) over ~100k events/batch:
+        # per-partition state-store commit overhead dominates once
+        # partitions are thin (see run_grants_pipeline_merge doc and
+        # _stream_parts) — count derived from the staged backlog size,
+        # capped at the r7-measured 16.
         shuffle_partitions=_stream_parts(os.path.join(root, "events")),
     )
+    return root
+
+
+# Decorators apply bottom-up: stream_feature_grants registers first, so
+# the catalog order (and the head ordering derived from it) is unchanged.
+@register(
+    "stream_grants_incremental_merge",
+    _GRANTS_ORACLE,
+    doc="END-TO-END STREAMING, named for its strategy: foreachBatch "
+    "incremental MERGE (micro-batch conditional-agg deltas merged into "
+    "a sharded aggregate-state store — counters add, sets union, cent "
+    "sums add), zero Python per event. The same function as "
+    "stream_feature_grants, kept under both catalog names",
+)
+@register(
+    "stream_feature_grants",
+    _GRANTS_ORACLE,
+    doc="END-TO-END STREAMING: uuid dedup + per-user aggregate MERGE + "
+    "grants foreachBatch, oracle-checked against the batch grants SQL",
+)
+def stream_feature_grants(spark, sf_dir):
+    root = _run_grants(spark, sf_dir)
     return grants_snapshot(spark, os.path.join(root, "grants"))
 
 
@@ -251,15 +248,7 @@ FROM long WHERE NOT has_grant
     "configured), so the flip log equals the final revoked set",
 )
 def stream_grant_notifications(spark, sf_dir):
-    root = _stage_events(spark, sf_dir)
-    run_grants_pipeline(
-        spark,
-        events_path=os.path.join(root, "events"),
-        grants_path=os.path.join(root, "grants"),
-        notifications_path=os.path.join(root, "notifications"),
-        checkpoint_path=os.path.join(root, "checkpoint"),
-        shuffle_partitions=_stream_parts(os.path.join(root, "events")),
-    )
+    root = _run_grants(spark, sf_dir)
     return read_notifications(spark, os.path.join(root, "notifications"))
 
 
@@ -801,16 +790,7 @@ def fs_grants_forget_users(spark, sf_dir):
     from feature_store_2_spark.streaming import sharded_store
     from feature_store_2_spark.streaming.grants_store import GRANT_KEYS
 
-    root = _stage_events(spark, sf_dir)
-    grants_path = os.path.join(root, "grants")
-    run_grants_pipeline_merge(
-        spark,
-        events_path=os.path.join(root, "events"),
-        grants_path=grants_path,
-        notifications_path=os.path.join(root, "notifications"),
-        checkpoint_path=os.path.join(root, "checkpoint"),
-        shuffle_partitions=_stream_parts(os.path.join(root, "events")),
-    )
+    grants_path = os.path.join(_run_grants(spark, sf_dir), "grants")
     stored = sharded_store.snapshot(spark, grants_path)
     forget = stored.filter(F.col("user_id") % 37 == 0).select("user_id", "feature")
     sharded_store.delete_keys(forget, grants_path, GRANT_KEYS, "user_id")

@@ -7,19 +7,17 @@ grant upserts + notifications, plus a 15-second circuit-breaker loop
 three Structured Streaming constructs:
 
   * ``read_event_stream``  — file-source readStream (the queue, A1/A3)
-  * ``streaming_user_aggregates`` + ``run_grants_pipeline`` — per-user
-    stateful aggregation (applyInPandasWithState) feeding a foreachBatch
-    sink that upserts the grants store and emits grant-change
-    notifications (A5-A14, A18)
+  * ``run_grants_pipeline_merge`` — bounded uuid dedup feeding a
+    foreachBatch sink that MERGEs per-user aggregate deltas into a
+    sharded state store, upserts the grants store and emits
+    grant-change notifications (A5-A14, A18)
   * ``streaming_denial_rate``  — watermarked sliding-window denial-rate /
     circuit-breaker aggregation (A16/A17)
 """
 
 from feature_store_2_spark.streaming.pipeline import (
     read_event_stream,
-    run_grants_pipeline,
     run_grants_pipeline_merge,
-    streaming_user_aggregates,
 )
 from feature_store_2_spark.streaming.breaker import (
     streaming_denial_rate,
@@ -38,8 +36,6 @@ from feature_store_2_spark.streaming.sharded_store import snapshot as grants_sna
 
 __all__ = [
     "read_event_stream",
-    "streaming_user_aggregates",
-    "run_grants_pipeline",
     "run_grants_pipeline_merge",
     "streaming_denial_rate",
     "streaming_denial_rate_exact",

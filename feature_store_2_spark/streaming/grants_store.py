@@ -10,7 +10,7 @@ serving path is a point lookup with circuit fail-open
 
 Two storage layers live behind this module:
 
-* the SHARDED store (sharded_store.py) — what ``run_grants_pipeline``
+* the SHARDED store (sharded_store.py) — what ``run_grants_pipeline_merge``
   writes and ``has_grant``/``serve_has_grant`` read: incremental MERGE
   (manifest log, touched-shard rewrites, retention/time travel), the
   Delta/Iceberg-shaped path that survives 100 TB. Lookups read the

@@ -62,7 +62,7 @@ class StateMetricsListener(StreamingQueryListener):
     def state_rows(self) -> dict[str, int]:
         """Max keyed-state rows observed per stateful OPERATOR, keyed
         ``<query-name>#op<i>`` (unnamed queries key by id) — a pipeline
-        with uuid-dedup + keyed aggregation reports two entries, each
+        with two chained stateful operators reports two entries, each
         the number that must stay bounded by its own key space, never
         grow with total rows ingested."""
         out: dict[str, int] = {}

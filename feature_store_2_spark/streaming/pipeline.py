@@ -1,4 +1,4 @@
-"""Streaming ingest -> per-user stateful aggregates -> grants foreachBatch.
+"""Streaming ingest -> per-user aggregates -> grants foreachBatch.
 
 Reference parity: this is the consumer side of the reference — events
 pulled off the queue by EventConsumer.consume
@@ -7,43 +7,39 @@ accumulators (models/aggregate.py:41-83), then rules/features evaluated
 and grants flipped (services/event_processer.py:25-66,
 services/user_feature.py:32-44). The asyncio queue becomes a file-source
 readStream; the three consumer tasks become Spark's per-partition
-parallelism; the in-heap accumulator dicts become keyed state in
-``applyInPandasWithState``; the grant flips + notifications become a
-``foreachBatch`` sink over the grants store.
+parallelism; the in-heap accumulator dicts become a sharded
+aggregate-state store MERGEd once per micro-batch; the grant flips +
+notifications become a ``foreachBatch`` sink over the grants store.
 
-Why applyInPandasWithState and not a plain watermarked streaming agg:
-the reference's aggregates need per-user *distinct* accumulation
+Why a foreachBatch MERGE and not a plain watermarked streaming agg: the
+reference's aggregates need per-user *distinct* accumulation
 (uuid-dedup COUNT/SUM, DISTINCT_COUNT(field) — models/aggregate.py:53-68)
-and ``countDistinct`` is not supported inside streaming aggregations, so
-the per-user distinct sets live in keyed state exactly as the reference
-keeps them in heap dicts. State is Arrow-batched per key group — the
-Python boundary processes whole pandas frames, never row-at-a-time.
+and ``countDistinct`` is not supported inside streaming aggregations.
+Per micro-batch, though, every accumulator IS relationally expressible:
+aggregate the batch with the same conditional-agg Columns as the batch
+plan, then merge the per-user deltas into the stored state (counters
+add, sets union, cent sums add). The whole hot loop stays in JVM
+codegen; no Python runs per event.
 
 State is BOUNDED (100 TB / 1000 executors): uuid exactly-once is
-enforced upstream by ``dropDuplicatesWithinWatermark`` — its dedup
-state is keyed by (user_id, event_id) and EVICTED once the watermark
-passes, so memory is bounded by the duplicate-arrival window, not by
-history — and the per-user keyed state holds only plain counters,
-cent-exact sums, and the DISTINCT_COUNT field sets (bounded by field
-cardinality, the reference's own memory model). Nothing in state grows
-with total event volume. State is partitioned by user_id hash across
-executors and checkpointed (RocksDB state store in prod config).
+enforced upstream by ``dropDuplicatesWithinWatermark`` — the ONE
+stateful streaming operator; its state is keyed by (user_id, event_id)
+and EVICTED once the watermark passes, so memory is bounded by the
+duplicate-arrival window, not by history. The per-user aggregate store
+holds only plain counters, cent-exact sums, and the DISTINCT_COUNT
+field sets (bounded by field cardinality, the reference's own memory
+model), sharded by user_id hash so a micro-batch touching k users
+rewrites at most k shards.
 """
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from feature_store_2_spark.config import DEFAULT_CONFIG, AggregateType, EngineConfig
 from feature_store_2_spark.plans.feature_pipeline import (
+    _SUM_DECIMAL,
     _field_col,
     grants_wide_from_aggregates,
     melt_grants,
@@ -57,36 +53,6 @@ from feature_store_2_spark.streaming.grants_store import (
     ensure_notifications_log,
     grant_changes,
 )
-
-
-_CENT = Decimal("0.01")
-
-
-def _cents_sum(values: np.ndarray) -> int:
-    """Exact integer-cents sum of finite doubles, converting EACH value
-    with the same rounding as the batch plan's / JVM-merge's
-    ``try_cast(DECIMAL(18,2))`` (plans/feature_pipeline.py:127-131,
-    _aggregate_deltas below): Spark renders the double with its
-    shortest round-trip string (Java ``Double.toString``; Python
-    ``repr`` produces the identical digits) and rounds HALF_UP to two
-    decimals — measured to agree with DuckDB's double->DECIMAL(18,2)
-    cast on every boundary case (0.615, 1.005, 2.675, ...) below
-    |v| ~ 2^53/100, so the oracle sees the same cents (above that
-    band DuckDB multiplies by 10^scale in double and loses ulps — see
-    test_cents_mirror_agrees_three_ways). Per-value conversion
-    (round-then-sum, not the pre-r11 sum-then-round) makes the
-    accumulator an exact int64 add: results are independent of
-    micro-batch slicing and stay exact through the (9e13, 1e16)
-    magnitude band where float cents arithmetic loses ulps. Reference
-    tie: the A7 dedup-sum appends raw per-event amounts
-    (models/aggregate.py:55-57,67-68); the cents quantization is this
-    repo's shared decimal intake envelope."""
-    total = 0
-    for v in values.tolist():
-        total += int(
-            Decimal(repr(v)).quantize(_CENT, rounding=ROUND_HALF_UP).scaleb(2)
-        )
-    return total
 
 
 def read_event_stream(
@@ -111,346 +77,6 @@ def read_event_stream(
     )
 
 
-def _state_fields(config: EngineConfig) -> list[tuple[str, T.DataType]]:
-    """Keyed-state layout: the per-user accumulators of
-    models/aggregate.py:41-83 — counters and cent-exact sums (SUM
-    accumulates exact integer cents so streaming totals are bit-identical
-    to the batch pipeline's decimal accumulation) plus DISTINCT_COUNT
-    field-value sets. Uuid dedup lives in the upstream
-    ``dropDuplicatesWithinWatermark`` operator's own evicted state, NOT
-    here — no per-user seen-id set, so state never grows with volume.
-
-    DISTINCT_COUNT sets store the extracted DOUBLE values themselves
-    (r12; previously their Python ``str()`` renderings): the field
-    columns are already cast to double at the scan projection, distinct
-    doubles <-> distinct shortest-repr strings bijectively (repr round-
-    trips), and only the SET SIZE ever leaves state — so counts are
-    identical while the Arrow state serde ships 8-byte doubles instead
-    of rendered strings and the per-batch str() loop disappears (guide
-    §4: shrink what crosses the boundary). This also aligns the layout
-    with the all-JVM merge strategy's array<double> aggregate store."""
-    fields: list[tuple[str, T.DataType]] = []
-    for spec in config.aggregates:
-        if spec.type is AggregateType.COUNT:
-            fields.append((spec.name, T.LongType()))
-        elif spec.type is AggregateType.DISTINCT_COUNT:
-            fields.append((spec.name, T.ArrayType(T.DoubleType())))
-        else:  # SUM, integer cents
-            fields.append((spec.name, T.LongType()))
-    return fields
-
-
-def _output_schema(config: EngineConfig) -> T.StructType:
-    """Matches batch ``user_aggregates`` output exactly (same names,
-    same types) so the downstream rule/feature Columns are shared."""
-    fields = [T.StructField("user_id", T.LongType())]
-    for spec in config.aggregates:
-        dtype = (
-            T.DoubleType() if spec.type is AggregateType.SUM else T.LongType()
-        )
-        fields.append(T.StructField(spec.name, dtype))
-    return T.StructType(fields)
-
-
-def streaming_user_aggregates(
-    events: DataFrame,
-    config: EngineConfig = DEFAULT_CONFIG,
-    dedup_watermark: str = "35 days",
-) -> DataFrame:
-    """Streaming per-user aggregate table: emits one updated row per
-    user per micro-batch (update semantics), same schema as the batch
-    ``user_aggregates``.
-
-    ``dedup_watermark`` bounds the uuid exactly-once window: a duplicate
-    event id arriving within it is dropped (models/aggregate.py:53-57);
-    one arriving after its original has aged out of the watermark would
-    double-count — the explicit, sized trade every at-least-once source
-    forces. Dedup state is evicted as the watermark advances."""
-    from feature_store_2_spark.plans.feature_pipeline import _SUM_DECIMAL
-
-    field_names: dict[str, str] = {}
-    for spec in config.aggregates:
-        if spec.field and spec.field not in field_names:
-            field_names[spec.field] = f"__f{len(field_names)}"
-    # r12 (guide §4.2 — do the per-row decimal work in the JVM, not in
-    # the Python worker): each SUM field additionally crosses the
-    # boundary as EXACT INTEGER CENTS computed by the same
-    # double -> try_cast(DECIMAL(18,2)) * 100 -> long expression as the
-    # batch plan and the all-JVM merge strategy (_delta_aggregates) —
-    # the conversion _cents_sum was built to mirror, pinned three-ways
-    # by test_cents_mirror_agrees_three_ways. NULL/NaN/Inf/overflow all
-    # try_cast to NULL exactly like the old Python-side envelope filter;
-    # the coalesce to 0 makes the column null-free so Arrow hands pandas
-    # a true int64 column (a nullable int64 would arrive as float64 and
-    # lose ulps past 2^53 cents — the magnitude band
-    # test_streaming_sum_cents_slicing_independent pins). A dropped
-    # value contributing 0 to a SUM is identity, so values are
-    # unchanged; the Python worker is left with a plain integer
-    # summation instead of a per-value Decimal(repr(v)).quantize loop.
-    sum_cents: dict[str, str] = {}
-    for spec in config.aggregates:
-        if spec.type is AggregateType.SUM and spec.field not in sum_cents:
-            sum_cents[spec.field] = f"__c{len(sum_cents)}"
-
-    # Project BEFORE the dedup shuffle: field extraction happens at scan
-    # (same order as the batch pipeline) and the wide ``props`` payload
-    # never enters the dedup state exchange — both stateful shuffles
-    # move only the narrow (keys + extracted fields) rows.
-    projected = (
-        events.select(
-            "user_id",
-            "event_id",
-            "ts",
-            "event_type",
-            *[_field_col(f).cast("double").alias(n) for f, n in field_names.items()],
-        )
-        .withWatermark("ts", dedup_watermark)
-        .dropDuplicatesWithinWatermark(["user_id", "event_id"])
-        .drop("ts")
-    )
-    projected = projected.select(
-        "*",
-        *[
-            F.coalesce(
-                (F.col(field_names[f]).try_cast(_SUM_DECIMAL) * 100).cast(
-                    "long"
-                ),
-                F.lit(0).cast("long"),
-            ).alias(n)
-            for f, n in sum_cents.items()
-        ],
-    )
-
-    state_fields = _state_fields(config)
-    state_schema = T.StructType(
-        [T.StructField(n, t) for n, t in state_fields]
-    )
-    out_schema = _output_schema(config)
-    specs = config.aggregates
-    fnames = dict(field_names)
-    cnames = dict(sum_cents)
-
-    def _apply_legacy(pdf: pd.DataFrame, accs: list, distinct_sets: list):
-        """Exact legacy path for a batch slice that DOES contain
-        duplicate event_ids (corrupt input: one uuid, conflicting
-        payloads — upstream dropDuplicatesWithinWatermark makes this
-        unreachable in a healthy stream, the fast path below asserts
-        it per batch). Reduces duplicates DETERMINISTICALLY — per-
-        column min over the DOUBLE fields, mirroring the batch
-        pipeline's min() tie-break — then converts the surviving
-        values with the pinned per-value Decimal rendering
-        (_cents_sum), because min-before-convert over nullable
-        doubles is not expressible on the 0-coalesced cents column."""
-        pdf = pdf.groupby("event_id", as_index=False).min()
-        for i, spec in enumerate(specs):
-            rows = pdf[pdf["event_type"] == spec.event_name]
-            if rows.empty:
-                continue
-            if spec.type is AggregateType.COUNT:
-                accs[i] += len(rows)
-            elif spec.type is AggregateType.DISTINCT_COUNT:
-                vals = rows[fnames[spec.field]].dropna()
-                distinct_sets[i].update(float(v) for v in vals)
-            else:  # SUM in exact integer cents
-                # dropna AND drop non-finite AND drop magnitudes
-                # beyond the intake envelope: the batch path's
-                # double->decimal try_cast nulls NaN/Inf (r9
-                # non-finite contract) and overflow (r10
-                # hostile-magnitude contract — a measurement that
-                # can't be represented is MISSING). 1e16 = the
-                # DECIMAL(18,2) intake envelope shared with the batch
-                # plan and the JVM merge strategy (cents < 1e18 always
-                # fit the int64 state; an accumulated |sum| past
-                # ~9.2e18 cents still fails LOUDLY at the state write
-                # — the streaming twin of ANSI decimal-agg overflow,
-                # never a wrap).
-                vals = rows[fnames[spec.field]].dropna()
-                fv = vals.astype(float).to_numpy()
-                fv = fv[np.isfinite(fv) & (np.abs(fv) < 1e16)]
-                accs[i] += _cents_sum(fv)
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            accs = list(state.get)
-        else:
-            accs = [
-                0 if s.type is not AggregateType.DISTINCT_COUNT else []
-                for s in specs
-            ]
-        distinct_sets = [
-            set(a or []) if s.type is AggregateType.DISTINCT_COUNT else None
-            for s, a in zip(specs, accs)
-        ]
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            # Cross-batch uuid dedup already happened upstream
-            # (dropDuplicatesWithinWatermark), and it also guarantees
-            # within-batch uniqueness (the first copy's state entry
-            # drops the second copy in the same batch). The residual
-            # duplicate-uuid reduction is therefore a defensive branch:
-            # one vectorized uniqueness probe keeps the healthy path
-            # free of the per-batch pandas groupby (guide §4.2).
-            if not pdf["event_id"].is_unique:
-                _apply_legacy(pdf, accs, distinct_sets)
-                continue
-            et = pdf["event_type"].to_numpy()
-            for i, spec in enumerate(specs):
-                mask = et == spec.event_name
-                if not mask.any():
-                    continue
-                if spec.type is AggregateType.COUNT:
-                    accs[i] += int(mask.sum())
-                elif spec.type is AggregateType.DISTINCT_COUNT:
-                    vals = pdf[fnames[spec.field]].to_numpy()[mask]
-                    distinct_sets[i].update(
-                        vals[~np.isnan(vals)].tolist()
-                    )
-                else:  # SUM — exact JVM-converted integer cents.
-                    # tolist -> Python-int sum keeps the accumulation
-                    # arbitrary-precision (a numpy int64 sum would wrap
-                    # silently; overflow must fail LOUDLY at the state
-                    # write, exactly as before).
-                    cents = pdf[cnames[spec.field]].to_numpy()[mask]
-                    accs[i] += sum(cents.tolist())
-        new_state = []
-        for i, spec in enumerate(specs):
-            if spec.type is AggregateType.DISTINCT_COUNT:
-                new_state.append(sorted(distinct_sets[i]))
-            else:
-                new_state.append(accs[i])
-        state.update(tuple(new_state))
-        row: dict[str, object] = {"user_id": key[0]}
-        for i, spec in enumerate(specs):
-            if spec.type is AggregateType.COUNT:
-                row[spec.name] = accs[i]
-            elif spec.type is AggregateType.DISTINCT_COUNT:
-                row[spec.name] = len(distinct_sets[i])
-            else:
-                row[spec.name] = accs[i] / 100.0
-        yield pd.DataFrame([row])
-
-    return projected.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_grants_pipeline(
-    spark: SparkSession,
-    events_path: str,
-    grants_path: str,
-    notifications_path: str,
-    checkpoint_path: str,
-    config: EngineConfig = DEFAULT_CONFIG,
-    subscribers: dict[str, tuple[str, ...]] | None = DEFAULT_SUBSCRIBERS,
-    shuffle_partitions: int | None = None,
-    max_files_per_trigger: int = 1 << 20,
-) -> None:
-    """End-to-end streaming run: ingest all currently-available event
-    files (``availableNow`` trigger — incremental, resumes from the
-    checkpoint), update per-user state, upsert grants, append
-    subscriber-routed grant-change notifications. Calling it again after
-    new files land processes only the new data — the reference's
-    always-on consumer loop, here as repeatable catch-up batches.
-
-    The grants table is the SHARDED store (streaming/sharded_store.py):
-    a micro-batch touching k users rewrites at most k shard directories,
-    never the whole table — write amplification proportional to data
-    touched, which is what survives 100 TB. The pre-merge snapshot read
-    for flip detection is restricted to the same touched shards (rows
-    elsewhere cannot match any incoming key).
-
-    ``shuffle_partitions`` right-sizes the TWO stateful operators (dedup
-    + keyed aggregation): streaming disables AQE, so every state
-    partition pays a per-batch state-store commit whether it holds 100
-    keys or 100k — measured 3x wall-clock at 100k events going 64 -> 16
-    partitions locally. Size it to events-per-batch / executor count; a
-    1000-executor RocksDB deployment raises it instead. The count is
-    baked into the checkpoint on first run (later runs reuse it)."""
-    prev_parts = None
-    if shuffle_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # First-run layout guarantee: the empty-tail skip below means an
-    # all-empty run appends nothing — initialize the notifications log
-    # (driver-side, no job) so its path always reads as a dataset.
-    ensure_notifications_log(notifications_path, subscribers)
-    aggs = streaming_user_aggregates(
-        read_event_stream(spark, events_path, max_files_per_trigger), config
-    )
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        new = None
-        try:
-            new = (
-                melt_grants(grants_wide_from_aggregates(batch_df, config), config)
-                .withColumn(sharded_store.SHARD_COL, sharded_store.shard_of("user_id"))
-                .persist()
-            )
-            touched = {
-                r[0] for r in new.select(sharded_store.SHARD_COL).distinct().collect()
-            }
-            # availableNow runs one extra no-data micro-batch after the
-            # backlog (the watermark-advance cycle); its grants delta is
-            # empty, so the store read / change diff / notification
-            # append / upsert are all value-identical no-ops — skip them
-            # (measured ~2 s of fixed per-batch overhead at sf0.1). The
-            # collect above already drove the batch plan end-to-end, so
-            # every stateful operator committed its state as usual.
-            if not touched:
-                return
-            old = sharded_store.read_store(
-                batch_df.sparkSession, grants_path, shards=touched
-            )
-            if old is not None:
-                old = old.drop(sharded_store.SHARD_COL)
-            changes = grant_changes(new.drop(sharded_store.SHARD_COL), old)
-            append_notifications(changes, notifications_path, subscribers)
-            sharded_store.upsert(
-                new, grants_path, GRANT_KEYS, "user_id", touched=touched
-            )
-        finally:
-            batch_df.unpersist()
-            if new is not None:
-                new.unpersist()
-
-    try:
-        query = (
-            aggs.writeStream.foreachBatch(merge)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-# ---------------------------------------------------------------------------
-# Alternative streaming strategy: foreachBatch incremental MERGE.
-#
-# applyInPandasWithState above is the *custom stateful operator* surface
-# (per-key logic the engine can't express relationally). But THIS
-# pipeline's per-user aggregates — uuid-deduped counts, distinct sets,
-# cent-exact sums — ARE relationally expressible per micro-batch, so the
-# scale path keeps the whole hot loop in JVM codegen: aggregate the
-# micro-batch with the same conditional-agg Columns as the batch plan,
-# then MERGE the per-user deltas into a sharded aggregate-state store
-# (counters add, sets union, sums add). Zero Python per event; the only
-# streaming state is dropDuplicatesWithinWatermark's bounded uuid window.
-# This is the Structured Streaming + Delta-MERGE aggregation pattern.
-# ---------------------------------------------------------------------------
-
-
 def _field_name_map(config: EngineConfig) -> dict[str, str]:
     field_names: dict[str, str] = {}
     for spec in config.aggregates:
@@ -466,8 +92,6 @@ def _delta_aggregates(
     conditional aggregation (same expressions as the batch plan's
     ``user_aggregates``). SUM deltas are exact integer cents and stay
     NULL when no contributing event arrived (batch NULL semantics)."""
-    from feature_store_2_spark.plans.feature_pipeline import _SUM_DECIMAL
-
     deduped = batch.groupBy("user_id", "event_id").agg(
         F.min("event_type").alias("event_type"),
         *[F.min(n).alias(n) for n in field_names.values()],
@@ -562,17 +186,30 @@ def run_grants_pipeline_merge(
     max_files_per_trigger: int = 1 << 20,
     retain_versions: int = 1,
 ) -> None:
-    """The all-JVM streaming grants pipeline: file-source ingest ->
-    bounded uuid dedup (the ONE stateful streaming operator) ->
-    foreachBatch { conditional-agg the micro-batch per user, MERGE the
-    deltas into the sharded aggregate-state store, derive grants for
-    exactly the touched users, upsert + notify }.
+    """End-to-end streaming grants run: file-source ingest -> bounded
+    uuid dedup (the ONE stateful streaming operator) -> foreachBatch {
+    conditional-agg the micro-batch per user, MERGE the deltas into the
+    sharded aggregate-state store, derive grants for exactly the touched
+    users, upsert + notify }. Ingests all currently-available event
+    files (``availableNow`` trigger); calling it again after new files
+    land processes only the new data, resuming from the checkpoint —
+    the reference's always-on consumer loop, here as repeatable
+    catch-up batches.
 
-    Identical results to ``run_grants_pipeline`` (both are gate-checked
-    against the batch grants SQL) but no Python executes per event —
-    per-user work is whole-stage-codegen'd and the per-batch Python
-    cost is O(1) driver orchestration. A micro-batch touching k users
-    rewrites <= k aggregate shards and <= k grant shards.
+    Gate-checked against the batch grants SQL. No Python executes per
+    event — per-user work is whole-stage-codegen'd and the per-batch
+    Python cost is O(1) driver orchestration. A micro-batch touching k
+    users rewrites <= k aggregate shards and <= k grant shards; the
+    pre-merge store reads for the state merge and flip detection are
+    restricted to the same touched shards.
+
+    ``shuffle_partitions`` right-sizes the stateful dedup operator:
+    streaming disables AQE, so every state partition pays a per-batch
+    state-store commit whether it holds 100 keys or 100k — measured 3x
+    wall-clock at 100k events going 64 -> 16 partitions locally. Size
+    it to events-per-batch / executor count; a 1000-executor RocksDB
+    deployment raises it instead. The count is baked into the
+    checkpoint on first run (later runs reuse it).
 
     Exactly-once under replay: foreachBatch is at-least-once, and this
     strategy merges DELTAS (counters add), so a replayed micro-batch
@@ -592,8 +229,9 @@ def run_grants_pipeline_merge(
     if shuffle_partitions is not None:
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # Same first-run layout guarantee as run_grants_pipeline (the
-    # empty-tail skip appends nothing on an all-empty run).
+    # First-run layout guarantee: the empty-tail skip below means an
+    # all-empty run appends nothing — initialize the notifications log
+    # (driver-side, no job) so its path always reads as a dataset.
     ensure_notifications_log(notifications_path, subscribers)
     field_names = _field_name_map(config)
     projected = (
@@ -623,14 +261,15 @@ def run_grants_pipeline_merge(
                 r[0]
                 for r in delta.select(sharded_store.SHARD_COL).distinct().collect()
             }
-            # Same empty-tail skip as run_grants_pipeline: the final
-            # watermark-advance micro-batch of availableNow carries no
+            # availableNow runs one extra no-data micro-batch after the
+            # backlog (the watermark-advance cycle); it carries no
             # deltas, so the aggstate merge, grants derivation, change
-            # diff, notification append and both upserts are no-ops.
-            # The collect above already executed the batch plan (uuid
-            # dedup state committed); skipping the tail changes no
-            # value. A replayed EMPTY batch skips identically, so the
-            # txn-stamp replay protocol is untouched.
+            # diff, notification append and both upserts are no-ops —
+            # skip them (measured ~2 s of fixed per-batch overhead at
+            # sf0.1). The collect above already executed the batch plan
+            # (uuid dedup state committed); skipping the tail changes
+            # no value. A replayed EMPTY batch skips identically, so
+            # the txn-stamp replay protocol is untouched.
             if not touched:
                 return
             # foreachBatch is at-least-once: a crash after the aggstate

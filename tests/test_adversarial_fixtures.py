@@ -236,19 +236,19 @@ def _crafted_events() -> pd.DataFrame:
     # magnitudes past 2^53 (the r10 verdict's latent streaming-SUM
     # find). Contract: EVERY double->decimal intake rounds the value's
     # shortest round-trip decimal rendering HALF_UP at the declared
-    # scale — Spark's cast (Double.toString + setScale HALF_UP), DuckDB
-    # TRY_CAST, and the Python keyed-state path's per-value _cents_sum
-    # mirror all measured to agree, including on the binary-vs-decimal
-    # traps (0.615's double is 0.61499..., yet all three give 0.62).
+    # scale — Spark's cast (Double.toString + setScale HALF_UP) and
+    # DuckDB TRY_CAST measured to agree, including on the
+    # binary-vs-decimal traps (0.615's double is 0.61499..., yet both
+    # give 0.62); the streaming pipeline converts with the same Spark
+    # cast per value before accumulating.
     # Round-THEN-sum per value also makes the streaming accumulator an
     # exact int64 add: micro-batch-slicing independent, and still exact
     # at 98000000000000.07 (stored double's shortest repr is ...06 —
     # both engines quantize THAT) where float cents (9.8e15 > 2^53)
     # lose ulps. Magnitudes whose double x100 is inexact (e.g.
     # 91000000000000.25) stay OUT of this fixture: DuckDB's cast
-    # multiplies in double there and genuinely diverges from Spark —
-    # the Spark-only band is pinned in test_properties
-    # (test_cents_mirror_agrees_three_ways) and test_streaming instead.
+    # multiplies in double there and genuinely diverges from Spark
+    # (the limit test_cents_intake_agrees_spark_and_duckdb records).
     # 0.0045 rounds to 0.00 at scale 2 — SUM unchanged, COUNT moves.
     # Dated April (bitmap subset unaffected), fresh user 16.
     rows.append((len(rows), dt.datetime(2024, 4, 4, 9), 16, "purchase",

@@ -7,10 +7,11 @@ reference's grants map has one entry per user,
 billions of keys). Spark's production answer is the RocksDB provider
 (state spills to local SSD, snapshot/changelog to the checkpoint), and
 its jar ships with pyspark (rocksdbjni). These tests pin that the
-ENTIRE grants pipeline — dropDuplicatesWithinWatermark uuid dedup +
-applyInPandasWithState per-user aggregates — produces bit-identical
-grants under RocksDB, so flipping the provider at scale is a pure
-config change, not a semantics change.
+ENTIRE grants pipeline — dropDuplicatesWithinWatermark uuid dedup (its
+one stateful streaming operator, whose state RocksDB now holds) +
+foreachBatch per-user aggregate MERGE — produces bit-identical grants
+under RocksDB, so flipping the provider at scale is a pure config
+change, not a semantics change.
 """
 
 import glob
@@ -20,7 +21,10 @@ import pytest
 
 from feature_store_2_spark.plans.feature_pipeline import feature_grants_long
 from feature_store_2_spark.sources.tables import load_table
-from feature_store_2_spark.streaming import grants_snapshot, run_grants_pipeline
+from feature_store_2_spark.streaming import (
+    grants_snapshot,
+    run_grants_pipeline_merge,
+)
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -49,7 +53,7 @@ def test_grants_pipeline_identical_under_rocksdb(
     events = load_table(spark, "events", sf_dir)
     events.write.parquet(events_dir)
 
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt)
+    run_grants_pipeline_merge(spark, events_dir, grants_dir, notes_dir, ckpt)
 
     streamed = grants_snapshot(spark, grants_dir).orderBy("user_id", "feature")
     expected = feature_grants_long(events).orderBy("user_id", "feature")

@@ -4,8 +4,9 @@ availableNow trigger, fixed event-time columns instead of freezegun.
 The headline assertion is batch/streaming equivalence: the streaming
 pipeline over the sf0.001 events parquet must produce exactly the grants
 the batch pipeline computes — the two share the rule/feature Columns, so
-this pins the stateful-aggregation layer (dedup, distinct sets, exact
-cent-sums) to the batch semantics the DuckDB oracle already checks.
+this pins the streaming aggregation layer (uuid dedup, aggregate-state
+MERGE of distinct sets and exact cent-sums) to the batch semantics the
+DuckDB oracle already checks.
 """
 
 import datetime as dt
@@ -29,7 +30,7 @@ from feature_store_2_spark.streaming import (
     grants_snapshot,
     has_grant,
     read_notifications,
-    run_grants_pipeline,
+    run_grants_pipeline_merge,
     serve_has_grant,
     streaming_denial_rate,
 )
@@ -52,7 +53,7 @@ def test_streaming_grants_match_batch(spark, sf_dir, tmp_path):
     events = load_table(spark, "events", sf_dir)
     events.write.parquet(events_dir)
 
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt)
+    run_grants_pipeline_merge(spark, events_dir, grants_dir, notes_dir, ckpt)
 
     streamed = grants_snapshot(spark, grants_dir).orderBy("user_id", "feature")
     expected = feature_grants_long(events).orderBy("user_id", "feature")
@@ -88,9 +89,14 @@ def test_incremental_batches_dedup_and_notifications(spark, tmp_path):
     persists via the checkpoint, grant flip emits access_revoked."""
     events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
 
+    def run():
+        run_grants_pipeline_merge(
+            spark, events_dir, grants_dir, notes_dir, ckpt, config=TEST_CONFIG
+        )
+
     # Batch 1: user 1 has one error -> grant holds (1 < 2).
     _write_events(spark, events_dir, [(100, 1, "error", None), (101, 1, "purchase", 5.0)])
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt, TEST_CONFIG)
+    run()
     assert has_grant(spark, grants_dir, 1, "message") is True
     assert read_notifications(spark, notes_dir).count() == 0
 
@@ -98,7 +104,7 @@ def test_incremental_batches_dedup_and_notifications(spark, tmp_path):
     # rule fails, feature revoked, notification emitted — routed to the
     # access_revoked subscriber (one row per subscriber endpoint).
     _write_events(spark, events_dir, [(100, 1, "error", None), (102, 1, "error", None)])
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt, TEST_CONFIG)
+    run()
     assert has_grant(spark, grants_dir, 1, "message") is False
     notes = read_notifications(spark, notes_dir).collect()
     assert [(r.user_id, r.feature, r.notification, r.subscriber) for r in notes] == [
@@ -111,7 +117,7 @@ def test_incremental_batches_dedup_and_notifications(spark, tmp_path):
     # (incremental MERGE, not a full-table rewrite).
     manifest_before = ss._read_manifest(grants_dir)
     _write_events(spark, events_dir, [(200, 2, "purchase", 1.0)])
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt, TEST_CONFIG)
+    run()
     manifest_after = ss._read_manifest(grants_dir)
     rewritten = {
         s
@@ -127,6 +133,47 @@ def test_incremental_batches_dedup_and_notifications(spark, tmp_path):
     # circuit fails open even for a revoked user.
     assert has_grant(spark, grants_dir, 999, "message") is True
     assert has_grant(spark, grants_dir, 1, "message", circuit_open=True) is True
+
+
+def test_incremental_merge_pipeline_cross_batch(spark, tmp_path):
+    """Across catch-up batches with an explicit aggregate-state path:
+    uuid dedup spans batches (checkpointed dropDuplicatesWithinWatermark
+    state), the aggregate-state store accumulates, flips notify, and a
+    one-user micro-batch rewrites at most one shard of EACH store."""
+    events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
+    aggstate_dir = str(tmp_path / "aggstate")
+
+    _write_events(spark, events_dir, [(100, 1, "error", None), (101, 1, "purchase", 5.0)])
+    run_grants_pipeline_merge(
+        spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
+    )
+    assert has_grant(spark, grants_dir, 1, "message") is True
+    assert read_notifications(spark, notes_dir).count() == 0
+
+    # Duplicate uuid 100 arrives again (must be ignored — dedup state
+    # lives in the checkpoint) + a second error -> rule fails, revoked.
+    _write_events(spark, events_dir, [(100, 1, "error", None), (102, 1, "error", None)])
+    run_grants_pipeline_merge(
+        spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
+    )
+    assert has_grant(spark, grants_dir, 1, "message") is False
+    notes = read_notifications(spark, notes_dir).collect()
+    assert [(r.user_id, r.feature, r.notification, r.subscriber) for r in notes] == [
+        (1, "message", "access_revoked", "https://api.example.com/event")
+    ]
+
+    # One new user -> at most one shard rewritten in BOTH stores.
+    grants_before = ss._read_manifest(grants_dir)
+    aggs_before = ss._read_manifest(aggstate_dir)
+    _write_events(spark, events_dir, [(200, 2, "purchase", 1.0)])
+    run_grants_pipeline_merge(
+        spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
+    )
+    for path, before in ((grants_dir, grants_before), (aggstate_dir, aggs_before)):
+        after = ss._read_manifest(path)
+        assert len({s for s in after if after[s] != before.get(s)}) <= 1
+    assert has_grant(spark, grants_dir, 1, "message") is False
+    assert has_grant(spark, grants_dir, 2, "message") is True
 
 
 def test_route_notifications_drops_unsubscribed_names(spark):
@@ -178,6 +225,13 @@ def test_streaming_distinct_and_sum_dedup_across_batches(spark, tmp_path):
     a genuinely new uuid carrying an already-seen field value counts for
     SUM but not for DISTINCT_COUNT."""
     events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
+    aggstate_dir = str(tmp_path / "aggstate")
+
+    def run():
+        run_grants_pipeline_merge(
+            spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir,
+            DEDUP_CONFIG,
+        )
 
     # Batch 1: two signups (values 1.0, 2.0) and a 5.00 purchase.
     _write_events(
@@ -185,7 +239,7 @@ def test_streaming_distinct_and_sum_dedup_across_batches(spark, tmp_path):
         events_dir,
         [(1, 1, "signup", 1.0), (2, 1, "signup", 2.0), (3, 1, "purchase", 5.0)],
     )
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt, DEDUP_CONFIG)
+    run()
     assert has_grant(spark, grants_dir, 1, "message") is True  # ks=2 > 1
 
     # Batch 2: uuid 3 replayed (must NOT re-add 5.00); uuid 4 is new with
@@ -196,27 +250,13 @@ def test_streaming_distinct_and_sum_dedup_across_batches(spark, tmp_path):
         events_dir,
         [(3, 1, "purchase", 5.0), (4, 1, "purchase", 5.0), (5, 1, "signup", 1.0)],
     )
-    run_grants_pipeline(spark, events_dir, grants_dir, notes_dir, ckpt, DEDUP_CONFIG)
+    run()
 
-    from feature_store_2_spark.streaming.pipeline import streaming_user_aggregates
-
-    # Recompute the aggregate table from scratch over ALL events to read
-    # the final accumulators (fresh checkpoint => full replay).
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(events_dir)
-    aggs = streaming_user_aggregates(stream, DEDUP_CONFIG)
-    q = (
-        aggs.writeStream.format("memory")
-        .queryName("dedup_aggs")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    row = spark.table("dedup_aggs").collect()[-1]
-    assert row.ks == 2  # values {1.0, 2.0}; replay + new-uuid-dup add nothing
-    assert row.spend == 10.0  # 5.00 (uuid 3, once) + 5.00 (uuid 4)
+    # The final accumulators are the aggregate-state store itself.
+    [row] = ss.snapshot(spark, aggstate_dir).collect()
+    assert row.user_id == 1
+    assert set(row.ks) == {1.0, 2.0}  # replay + new-uuid-dup add nothing
+    assert row.spend == 1000  # cents: 5.00 (uuid 3, once) + 5.00 (uuid 4)
 
 
 def test_streaming_denial_rate_window(spark, tmp_path):
@@ -297,50 +337,6 @@ def test_breaker_feeds_serving_fail_open(spark, tmp_path):
     )
 
 
-def test_incremental_merge_pipeline_cross_batch(spark, tmp_path):
-    """The all-JVM foreachBatch-MERGE strategy must behave exactly like
-    the keyed-state pipeline across catch-up batches: uuid dedup spans
-    batches (checkpointed dropDuplicatesWithinWatermark state), the
-    aggregate-state store accumulates, flips notify, and a one-user
-    micro-batch rewrites at most one shard of EACH store."""
-    from feature_store_2_spark.streaming import run_grants_pipeline_merge
-
-    events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
-    aggstate_dir = str(tmp_path / "aggstate")
-
-    _write_events(spark, events_dir, [(100, 1, "error", None), (101, 1, "purchase", 5.0)])
-    run_grants_pipeline_merge(
-        spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
-    )
-    assert has_grant(spark, grants_dir, 1, "message") is True
-    assert read_notifications(spark, notes_dir).count() == 0
-
-    # Duplicate uuid 100 arrives again (must be ignored — dedup state
-    # lives in the checkpoint) + a second error -> rule fails, revoked.
-    _write_events(spark, events_dir, [(100, 1, "error", None), (102, 1, "error", None)])
-    run_grants_pipeline_merge(
-        spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
-    )
-    assert has_grant(spark, grants_dir, 1, "message") is False
-    notes = read_notifications(spark, notes_dir).collect()
-    assert [(r.user_id, r.feature, r.notification, r.subscriber) for r in notes] == [
-        (1, "message", "access_revoked", "https://api.example.com/event")
-    ]
-
-    # One new user -> at most one shard rewritten in BOTH stores.
-    grants_before = ss._read_manifest(grants_dir)
-    aggs_before = ss._read_manifest(aggstate_dir)
-    _write_events(spark, events_dir, [(200, 2, "purchase", 1.0)])
-    run_grants_pipeline_merge(
-        spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
-    )
-    for path, before in ((grants_dir, grants_before), (aggstate_dir, aggs_before)):
-        after = ss._read_manifest(path)
-        assert len({s for s in after if after[s] != before.get(s)}) <= 1
-    assert has_grant(spark, grants_dir, 1, "message") is False
-    assert has_grant(spark, grants_dir, 2, "message") is True
-
-
 def test_merge_pipeline_exactly_once_on_batch_replay(spark, tmp_path):
     """foreachBatch is at-least-once: if a crash lands AFTER the
     aggstate MERGE commit but BEFORE the streaming checkpoint commit,
@@ -351,8 +347,6 @@ def test_merge_pipeline_exactly_once_on_batch_replay(spark, tmp_path):
     state, grants, and the notification log all converge to the
     single-apply values."""
     import os as _os
-
-    from feature_store_2_spark.streaming import run_grants_pipeline_merge
 
     events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
     aggstate_dir = str(tmp_path / "aggstate")
@@ -439,9 +433,9 @@ CENTS_CONFIG = EngineConfig(
 
 
 def test_streaming_sum_cents_slicing_independent(spark, tmp_path):
-    """Fixture class 11a pins for the r10 verdict's #1 find: the Python
-    keyed-state SUM path must convert EACH value to cents (HALF_UP on
-    the shortest decimal rendering, mirroring the batch plan's
+    """Fixture class 11a pins for the r10 verdict's #1 find: the
+    streaming SUM path must convert EACH value to cents (HALF_UP on the
+    shortest decimal rendering, the batch plan's
     try_cast(DECIMAL(18,2))) BEFORE accumulating — never sum raw floats
     and round once per micro-batch. Three consequences pinned here on
     non-cent-aligned amounts:
@@ -450,7 +444,9 @@ def test_streaming_sum_cents_slicing_independent(spark, tmp_path):
           GRANTED has_spend);
       (b) slicing independence: one-file-per-trigger replay equals the
           single-batch replay row-for-row (the float path gave
-          slicing-dependent cents for the same events);
+          slicing-dependent cents for the same events); each one-row
+          micro-batch MERGEs its cents delta into the aggregate-state
+          store, so this pins the cross-batch cents accumulation;
       (c) exactness past 2^53 cents: a (9e13, 1e16)-band amount plus a
           sub-cent amount accumulate exactly in int64 (float cents lose
           ulps there), again equal to batch.
@@ -495,17 +491,24 @@ def test_streaming_sum_cents_slicing_independent(spark, tmp_path):
                 _os.utime(fp, (base + k, base + k))
         else:
             _write_events(spark, events_dir, batch_rows)
-        run_grants_pipeline(
-            spark, events_dir, grants_dir, notes_dir, ckpt, CENTS_CONFIG,
+        aggstate_dir = str(root / "aggstate")
+        run_grants_pipeline_merge(
+            spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir,
+            CENTS_CONFIG,
             shuffle_partitions=4,
             max_files_per_trigger=1 if slice_files else 1 << 20,
         )
         snap = grants_snapshot(spark, grants_dir).orderBy("user_id", "feature")
-        return [tuple(r) for r in snap.collect()], events_dir
+        cents = {r.user_id: r.spend for r in ss.snapshot(spark, aggstate_dir).collect()}
+        return [tuple(r) for r in snap.collect()], cents, events_dir
 
-    got_sliced, events_dir = run(True, "sliced")
-    got_single, _ = run(False, "single")
+    got_sliced, cents_sliced, events_dir = run(True, "sliced")
+    got_single, cents_single, _ = run(False, "single")
     assert got_sliced == got_single  # (b) slicing independence
+    # ... down to the stored cents accumulators, exact past 2^53 (c)
+    assert cents_sliced == cents_single == {
+        1: 0, 2: 331, 3: 9800000000000006, 4: 0
+    }
 
     batch = [
         tuple(r)

@@ -104,26 +104,6 @@ def _patches_minhash_128k():
     return [(dedup, "shingle_exploded", default_bpt)]
 
 
-def _patches_old_grants_update():
-    """Revert the r12 vectorized python-state update (1e626ab) by
-    loading the pre-change streaming/pipeline.py module from git and
-    swapping its streaming_user_aggregates in."""
-    import importlib.util
-    import subprocess
-
-    from feature_store_2_spark.streaming import pipeline
-
-    src = subprocess.check_output(
-        ["git", "-C", os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-         "show", "1e626ab^:feature_store_2_spark/streaming/pipeline.py"]
-    ).decode()
-    spec = importlib.util.spec_from_loader("_old_pipeline_r12ab", loader=None)
-    old = importlib.util.module_from_spec(spec)
-    exec(compile(src, "_old_pipeline_r12ab", "exec"), old.__dict__)
-    return [(pipeline, "streaming_user_aggregates",
-             old.streaming_user_aggregates)]
-
-
 def _patches_bfs_eager():
     """Revert the r12 lazy BFS barrier to per-hop localCheckpoint."""
     from feature_store_2_spark.operators import sizing
@@ -140,7 +120,6 @@ PAIRS = {
     "ann": ("dedup_embedding_ann_pairs", _patches_const_parallelism),
     "minhash": ("dedup_minhash_lsh", _patches_minhash_128k),
     "bfslazy": ("graph_bfs_distance", _patches_bfs_eager),
-    "grantsvec": ("stream_feature_grants", _patches_old_grants_update),
 }
 
 

@@ -44,7 +44,6 @@ KEY_STRIDE = 100_000_000
 ENTRIES = (
     "q1_pricing_summary",
     "stream_feature_grants",
-    "stream_grants_incremental_merge",
     "stream_sessionize",
     "dedup_embedding_ann_pairs",
     "dedup_embedding_ann_adaptive",
