@@ -112,10 +112,9 @@ HEADLINE = [
     # uuid dedup -> foreachBatch MERGE of per-user aggregate deltas (zero
     # Python per event) -> grants upsert. ~100k events at sf0.1; wall
     # seconds here are ~events/sec throughput vs BASELINE's 2k req/s.
+    # (stream_grants_incremental_merge is the same function under its
+    # strategy name, so it is not timed twice.)
     "stream_feature_grants",
-    # The same function under its strategy name (one catalog function
-    # registered twice); it keeps a second sample of the same plan.
-    "stream_grants_incremental_merge",
 ]
 
 

@@ -53,8 +53,8 @@ SELECT user_id, 'message' AS feature, message_grant AS has_grant FROM wide
 
 
 # Bytes of staged source per state partition: with AQE off in
-# streaming, EVERY micro-batch (including availableNow's no-data
-# watermark-advance tail) pays one state-store commit per partition per
+# streaming, EVERY micro-batch (including availableNow's no-data tail,
+# in the entries that run one) pays one state-store commit per partition per
 # stateful operator whether the partition holds 60 keys or 60k —
 # profiled at ~200-300 ms summed commit time per partition on empty
 # deltas (tools/stream_tail_profile.py receipts in OPTIMIZATION_r12.md).

@@ -132,19 +132,17 @@ def route_notifications(
     subscribers: dict[str, tuple[str, ...]] = DEFAULT_SUBSCRIBERS,
 ) -> DataFrame:
     """Fan each grant-change row out to its notification's subscribers
-    (services/notifications.py:16-25): broadcast-join the tiny
-    name->endpoints map, explode to one row per (change, subscriber).
-    Unsubscribed notification names are dropped, mirroring
-    ``send_notification``'s early return."""
-    spark = notifications.sparkSession
-    sub_map = spark.createDataFrame(
-        [(name, list(subs)) for name, subs in subscribers.items()],
-        "notification string, __subs array<string>",
-    )
-    return (
-        notifications.join(F.broadcast(sub_map), "notification", "inner")
-        .withColumn("subscriber", F.explode("__subs"))
-        .select("user_id", "feature", "notification", "subscriber")
+    (services/notifications.py:16-25): one lookup in a name->endpoints
+    map literal, exploded to a row per (change, subscriber) — no join,
+    and no Spark job to build. Unsubscribed names and empty endpoint
+    lists yield no rows, mirroring ``send_notification``'s early
+    return; the cast types the map even when ``subscribers`` is empty."""
+    routes = F.create_map(
+        *[F.lit(x) for name, subs in subscribers.items() for x in (name, list(subs))]
+    ).cast("map<string,array<string>>")
+    subscriber = F.explode(F.try_element_at(routes, F.col("notification")))
+    return notifications.select(
+        "user_id", "feature", "notification", subscriber.alias("subscriber")
     )
 
 

@@ -25,7 +25,9 @@ State is BOUNDED (100 TB / 1000 executors): uuid exactly-once is
 enforced upstream by ``dropDuplicatesWithinWatermark`` — the ONE
 stateful streaming operator; its state is keyed by (user_id, event_id)
 and EVICTED once the watermark passes, so memory is bounded by the
-duplicate-arrival window, not by history. The per-user aggregate store
+duplicate-arrival window, not by history. A catch-up runs no no-data
+micro-batch, so eviction happens in the next data batch: one catch-up
+late, never skipped. The per-user aggregate store
 holds only plain counters, cent-exact sums, and the DISTINCT_COUNT
 field sets (bounded by field cardinality, the reference's own memory
 model), sharded by user_id hash so a micro-batch touching k users
@@ -196,6 +198,11 @@ def run_grants_pipeline_merge(
     the reference's always-on consumer loop, here as repeatable
     catch-up batches.
 
+    No-data micro-batches are off for the query (session value restored
+    after): the commit log carries the watermark forward, and dedup-state
+    eviction runs in the next data batch — one catch-up late, never lost
+    (tests/test_streaming.py).
+
     Gate-checked against the batch grants SQL. No Python executes per
     event — per-user work is whole-stage-codegen'd and the per-batch
     Python cost is O(1) driver orchestration. A micro-batch touching k
@@ -225,10 +232,6 @@ def run_grants_pipeline_merge(
     backlog as replayed — the same rule Delta documents for
     ``txnVersion``."""
     aggstate_path = aggstate_path or grants_path + "_aggstate"
-    prev_parts = None
-    if shuffle_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     # First-run layout guarantee: the empty-tail skip below means an
     # all-empty run appends nothing — initialize the notifications log
     # (driver-side, no job) so its path always reads as a dataset.
@@ -261,15 +264,13 @@ def run_grants_pipeline_merge(
                 r[0]
                 for r in delta.select(sharded_store.SHARD_COL).distinct().collect()
             }
-            # availableNow runs one extra no-data micro-batch after the
-            # backlog (the watermark-advance cycle); it carries no
-            # deltas, so the aggstate merge, grants derivation, change
+            # A batch of empty files, or of duplicates only, carries no
+            # deltas: the aggstate merge, grants derivation, change
             # diff, notification append and both upserts are no-ops —
-            # skip them (measured ~2 s of fixed per-batch overhead at
-            # sf0.1). The collect above already executed the batch plan
-            # (uuid dedup state committed); skipping the tail changes
-            # no value. A replayed EMPTY batch skips identically, so
-            # the txn-stamp replay protocol is untouched.
+            # skip them. The collect above already executed the batch
+            # plan (uuid dedup state committed). A replayed EMPTY batch
+            # skips identically, so the txn-stamp replay protocol is
+            # untouched.
             if not touched:
                 return
             # foreachBatch is at-least-once: a crash after the aggstate
@@ -285,10 +286,8 @@ def run_grants_pipeline_merge(
             # any half-applied tail of the crashed batch exactly once.
             last_applied = sharded_store.read_txn(aggstate_path, _MERGE_TXN_APP)
             replayed = last_applied is not None and batch_id <= last_applied
+            state = sharded_store.read_store(sess, aggstate_path, shards=touched)
             if replayed:
-                state = sharded_store.read_store(
-                    sess, aggstate_path, shards=touched
-                )
                 if state is None:  # stamp without data = corrupt store
                     raise RuntimeError(
                         f"aggstate txn stamp >= batch {batch_id} but no "
@@ -301,14 +300,9 @@ def run_grants_pipeline_merge(
                     delta.select("user_id"), "user_id", "left_semi"
                 ).persist()
             else:
-                old_state = sharded_store.read_store(
-                    sess, aggstate_path, shards=touched
-                )
                 merged = (
                     _merge_state(
-                        None
-                        if old_state is None
-                        else old_state.drop(sharded_store.SHARD_COL),
+                        None if state is None else state.drop(sharded_store.SHARD_COL),
                         delta.drop(sharded_store.SHARD_COL),
                         config,
                     )
@@ -357,6 +351,12 @@ def run_grants_pipeline_merge(
                 if df is not None:
                     df.unpersist()
 
+    confs = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    if shuffle_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    prev_confs = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         query = (
             projected.writeStream.foreachBatch(merge)
@@ -367,5 +367,5 @@ def run_grants_pipeline_merge(
         )
         query.awaitTermination()
     finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        for k, v in prev_confs.items():
+            spark.conf.set(k, v)

@@ -11,6 +11,12 @@ cannot pay a full rewrite. Here the key space is hash-sharded
   3. commits a manifest mapping shard -> owning version, then swaps the
      ``_LATEST`` pointer (readers never see a half-written version).
 
+The manifest also carries the written rows' Spark schema
+(``StructType.jsonValue()``), which every read passes to
+``spark.read.schema(...)``: reads never infer, so building one launches
+no Spark job however many versions are live. A manifest without a
+schema raises; there is no inference fallback.
+
 This is exactly the shape of Delta/Iceberg MERGE (log = manifest, file
 group = shard): write amplification proportional to data touched, not
 table size. Reference parity: the per-key dict update of
@@ -27,6 +33,7 @@ Delta's OPTIMIZE. Unreferenced versions are deleted after commit.
 
 from __future__ import annotations
 
+import functools
 import json
 import operator
 import os
@@ -37,6 +44,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 N_SHARDS = 16
 SHARD_COL = "__shard"
@@ -62,17 +70,19 @@ def current_version(path: str) -> int | None:
         return None
 
 
+def _shards(doc: dict) -> dict[int, int]:
+    return {int(k): int(v) for k, v in doc["shards"].items()}
+
+
 def _read_manifest(path: str) -> dict[int, int] | None:
-    version = current_version(path)
-    if version is None:
-        return None
-    with open(_manifest_path(path, version)) as f:
-        return {int(k): int(v) for k, v in json.load(f)["shards"].items()}
+    doc = _read_manifest_doc(path)
+    return None if doc is None else _shards(doc)
 
 
-def _read_manifest_doc(path: str) -> dict | None:
-    """The full current manifest document (shards + any txn stamps)."""
-    version = current_version(path)
+def _read_manifest_doc(path: str, version: int | None = None) -> dict | None:
+    """A manifest document (shards, schema, txn stamps): ``version``'s,
+    by default the current one's."""
+    version = current_version(path) if version is None else version
     if version is None:
         return None
     with open(_manifest_path(path, version)) as f:
@@ -193,41 +203,90 @@ def read_store(
     ``VERSION AS OF``): each manifest is an immutable shard->version map,
     so any retained manifest reconstructs its exact snapshot. Retention
     is ``upsert(retain_versions=...)``; reading a GC'd version raises.
+
+    Reads use the manifest's schema (no inference, so no Spark job); a
+    manifest without one raises.
     """
     if at_version is not None:
         try:
-            with open(_manifest_path(path, at_version)) as f:
-                manifest = {
-                    int(k): int(v) for k, v in json.load(f)["shards"].items()
-                }
+            doc = _read_manifest_doc(path, at_version)
         except FileNotFoundError:
             raise ValueError(
                 f"version {at_version} is not retained (GC'd or never written)"
             )
     else:
-        manifest = _read_manifest(path)
-    if manifest is None:
+        doc = _read_manifest_doc(path)
+    if doc is None:
         return None
+    if "schema" not in doc:
+        raise ValueError(f"{path}: manifest carries no schema")
     by_version: dict[int, list[int]] = {}
-    for shard, version in manifest.items():
+    for shard, version in _shards(doc).items():
         if shards is None or shard in shards:
             by_version.setdefault(version, []).append(shard)
-    parts = []
-    for version, owned in sorted(by_version.items()):
-        df = spark.read.parquet(_data_dir(path, version))
-        parts.append(df.filter(F.col(SHARD_COL).isin(owned)))
-    if not parts:
+    if not by_version:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    reader = spark.read.schema(StructType.fromJson(doc["schema"]))
+    parts = [
+        reader.parquet(_data_dir(path, version)).filter(F.col(SHARD_COL).isin(owned))
+        for version, owned in sorted(by_version.items())
+    ]
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def snapshot(spark: SparkSession, path: str) -> DataFrame | None:
     """Current store contents without the internal ``__shard`` column."""
     df = read_store(spark, path)
     return None if df is None else df.drop(SHARD_COL)
+
+
+def _commit(
+    path: str,
+    prev: dict,
+    version: int,
+    shards: dict[int, int],
+    written: DataFrame,
+    retain_versions: int,
+    txn: tuple[str, int] | None = None,
+) -> None:
+    """Commit ``version`` over ``prev``, the manifest it replaces: write
+    its manifest (shard -> owning version, the schema a read of
+    ``written``'s partitioned write sees, ``prev``'s txn stamps plus
+    ``txn``), swap ``_LATEST`` to it, then GC what retention drops."""
+    schema = written.drop(SHARD_COL).schema.add(SHARD_COL, IntegerType())
+    txn_map = {k: int(v) for k, v in prev.get("txn", {}).items()}
+    if txn is not None:
+        txn_map[txn[0]] = int(txn[1])
+    doc = {
+        "shards": {str(k): v for k, v in shards.items()},
+        "schema": schema.jsonValue(),
+        "txn": txn_map,
+    }
+    os.makedirs(path, exist_ok=True)
+    with open(_manifest_path(path, version), "w") as f:
+        json.dump(doc, f)
+    tmp = _latest_path(path) + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, _latest_path(path))
+
+    # GC: keep the data referenced by the last ``retain_versions``
+    # manifests (the time-travel window); everything older goes.
+    oldest_kept = max(0, version - retain_versions + 1)
+    still_live: set[int] = set()
+    for v in range(oldest_kept, version + 1):
+        try:
+            still_live |= set(_shards(_read_manifest_doc(path, v)).values())
+        except FileNotFoundError:
+            pass
+    for old_v in (set(_shards(prev).values()) | {version}) - still_live:
+        shutil.rmtree(_data_dir(path, old_v), ignore_errors=True)
+    for old_v in range(oldest_kept):
+        if old_v not in still_live:
+            try:
+                os.remove(_manifest_path(path, old_v))
+            except FileNotFoundError:
+                pass
 
 
 def upsert(
@@ -263,11 +322,8 @@ def upsert(
     are carried forward untouched.
     """
     spark = new.sparkSession
-    doc = _read_manifest_doc(path) or {}
-    txn_map: dict[str, int] = {k: int(v) for k, v in doc.get("txn", {}).items()}
-    if txn is not None:
-        txn_map[txn[0]] = int(txn[1])
-    manifest = {int(k): int(v) for k, v in doc.get("shards", {}).items()}
+    doc = _read_manifest_doc(path) or {"shards": {}}
+    manifest = _shards(doc)
     # Version off _LATEST, not manifest truthiness: a delete_keys that
     # emptied every shard leaves a committed EMPTY manifest, and the next
     # upsert must continue the version chain, not restart at v0.
@@ -281,8 +337,7 @@ def upsert(
             r[0] for r in new.select(SHARD_COL).distinct().collect()
         }  # tiny: <= n_shards ints
 
-    live_versions = set(manifest.values())
-    compacting = len(live_versions) + 1 > compact_after
+    compacting = len(set(manifest.values())) + 1 > compact_after
     shards_to_write = set(manifest) | touched if compacting else touched
     if not shards_to_write:  # empty batch, nothing to fold
         return
@@ -310,37 +365,7 @@ def upsert(
     new_manifest = dict(manifest)
     for s in shards_to_write:
         new_manifest[s] = next_version
-    os.makedirs(path, exist_ok=True)
-    manifest_doc: dict = {
-        "shards": {str(k): v for k, v in new_manifest.items()}
-    }
-    if txn_map:
-        manifest_doc["txn"] = txn_map
-    with open(_manifest_path(path, next_version), "w") as f:
-        json.dump(manifest_doc, f)
-    tmp = _latest_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(next_version))
-    os.replace(tmp, _latest_path(path))
-
-    # GC: keep the data referenced by the last ``retain_versions``
-    # manifests (the time-travel window); everything older goes.
-    oldest_kept = max(0, next_version - retain_versions + 1)
-    still_live: set[int] = set()
-    for v in range(oldest_kept, next_version + 1):
-        try:
-            with open(_manifest_path(path, v)) as f:
-                still_live |= {int(x) for x in json.load(f)["shards"].values()}
-        except FileNotFoundError:
-            pass
-    for old_v in (live_versions | {next_version}) - still_live:
-        shutil.rmtree(_data_dir(path, old_v), ignore_errors=True)
-    for old_v in range(oldest_kept):
-        if old_v not in still_live:
-            try:
-                os.remove(_manifest_path(path, old_v))
-            except FileNotFoundError:
-                pass
+    _commit(path, doc, next_version, new_manifest, merged, retain_versions, txn)
 
 
 def _shard_of_key(key_value, n_shards: int) -> int:
@@ -376,8 +401,7 @@ def _open_shard(shard_dir: str, shard_key: str, key_value) -> ds.Dataset:
 def _lookup_at(
     path: str, version: int, shard_key: str, key_value, n_shards: int
 ) -> list[dict]:
-    with open(_manifest_path(path, version)) as f:
-        manifest = {int(k): int(v) for k, v in json.load(f)["shards"].items()}
+    manifest = _shards(_read_manifest_doc(path, version))
     if not manifest:
         return []
     shard = _shard_of_key(key_value, n_shards)
@@ -444,9 +468,8 @@ def delete_keys(
     Returns the number of shards rewritten.
     """
     spark = keys.sparkSession
-    doc = _read_manifest_doc(path) or {}
-    txn_map = {k: int(v) for k, v in doc.get("txn", {}).items()}
-    manifest = {int(k): int(v) for k, v in doc.get("shards", {}).items()}
+    doc = _read_manifest_doc(path) or {"shards": {}}
+    manifest = _shards(doc)
     if not manifest:
         return 0
     version = current_version(path)
@@ -471,39 +494,12 @@ def delete_keys(
     new_manifest = dict(manifest)
     for s in touched:
         # A shard whose every row was deleted writes no partition
-        # directory; referencing next_version for it would point readers
-        # at a parquet-less path (schema inference fails). Drop it from
-        # the manifest instead — the shard now holds zero rows.
+        # directory; referencing next_version for it would point lookups
+        # at a missing directory. Drop it from the manifest instead —
+        # the shard now holds zero rows.
         if os.path.isdir(os.path.join(target, f"{SHARD_COL}={s}")):
             new_manifest[s] = next_version
         else:
             new_manifest.pop(s, None)
-    manifest_doc: dict = {
-        "shards": {str(k): v for k, v in new_manifest.items()}
-    }
-    if txn_map:
-        manifest_doc["txn"] = txn_map
-    with open(_manifest_path(path, next_version), "w") as f:
-        json.dump(manifest_doc, f)
-    tmp = _latest_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(next_version))
-    os.replace(tmp, _latest_path(path))
-
-    oldest_kept = max(0, next_version - retain_versions + 1)
-    still_live: set[int] = set()
-    for v in range(oldest_kept, next_version + 1):
-        try:
-            with open(_manifest_path(path, v)) as f:
-                still_live |= {int(x) for x in json.load(f)["shards"].values()}
-        except FileNotFoundError:
-            pass
-    for old_v in (set(manifest.values()) | {next_version}) - still_live:
-        shutil.rmtree(_data_dir(path, old_v), ignore_errors=True)
-    for old_v in range(oldest_kept):
-        if old_v not in still_live:
-            try:
-                os.remove(_manifest_path(path, old_v))
-            except FileNotFoundError:
-                pass
+    _commit(path, doc, next_version, new_manifest, kept, retain_versions)
     return len(touched)

@@ -10,7 +10,10 @@ DuckDB oracle already checks.
 """
 
 import datetime as dt
+import json
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from feature_store_2_spark.sources.tables import load_table
@@ -75,8 +78,10 @@ TEST_CONFIG = EngineConfig(
 )
 
 
-def _write_events(spark, path, rows, mode="append"):
-    ts = dt.datetime(2026, 1, 1, 12, 0, 0)
+T0 = dt.datetime(2026, 1, 1, 12, 0, 0)
+
+
+def _write_events(spark, path, rows, mode="append", ts=T0):
     df = spark.createDataFrame(
         [(eid, ts, uid, etype, val, None) for eid, uid, etype, val in rows],
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
@@ -178,8 +183,8 @@ def test_incremental_merge_pipeline_cross_batch(spark, tmp_path):
 
 def test_route_notifications_drops_unsubscribed_names(spark):
     """Reference send_notification early-returns when a name has no
-    subscribers (services/notifications.py:17-19); the broadcast map
-    join reproduces that, and multi-endpoint names fan out once per
+    subscribers (services/notifications.py:17-19); the map lookup
+    reproduces that, and multi-endpoint names fan out once per
     subscriber."""
     from feature_store_2_spark.streaming import route_notifications
 
@@ -204,6 +209,130 @@ def test_route_notifications_drops_unsubscribed_names(spark):
         (1, "access_revoked", "https://b.example/hook"),
         (2, "access_granted", "https://a.example/hook"),
     ]
+
+
+
+CHANGES_SCHEMA = "user_id long, feature string, notification string"
+
+
+@pytest.mark.parametrize(
+    "subscribers, expected",
+    [
+        # An empty endpoint tuple routes nowhere. (Two subscribers on one
+        # name: test_route_notifications_drops_unsubscribed_names.)
+        ({"access_revoked": (), "access_granted": ("a",)}, [(2, "a")]),
+        ({"access_revoked": ()}, []),
+        # No subscribers at all: zero rows, not an analysis error (an
+        # empty map literal has no key type of its own).
+        ({}, []),
+    ],
+)
+def test_route_notifications_fan_out_edges(spark, subscribers, expected):
+    from feature_store_2_spark.streaming import route_notifications
+
+    changes = spark.createDataFrame(
+        [(1, "message", "access_revoked"), (2, "message", "access_granted")],
+        CHANGES_SCHEMA,
+    )
+    routed = route_notifications(changes, subscribers)
+    assert routed.columns == ["user_id", "feature", "notification", "subscriber"]
+    assert sorted((r.user_id, r.subscriber) for r in routed.collect()) == expected
+
+
+def test_route_notifications_builds_without_a_spark_job(spark, jobs_launched):
+    from feature_store_2_spark.streaming import route_notifications
+
+    changes = spark.createDataFrame([(1, "message", "access_revoked")], CHANGES_SCHEMA)
+    jobs, routed = jobs_launched(lambda: route_notifications(changes))
+    assert jobs == 0
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Broadcast" not in plan
+
+
+def _commit_entries(ckpt):
+    return sorted(
+        int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()
+    )
+
+
+def test_catch_up_runs_one_micro_batch_and_reads_without_jobs(
+    spark, tmp_path, jobs_launched
+):
+    """Each catch-up over one landed file commits exactly one
+    micro-batch (no trailing no-data batch); the store reads behind it
+    carry their schema in the manifest, so building a snapshot read
+    launches no Spark job, and a manifest without one raises."""
+    events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
+    aggstate_dir = str(tmp_path / "aggstate")
+    for k in range(3):
+        _write_events(
+            spark, events_dir, [(10 * k, k, "error", None), (10 * k + 1, 1, "error", None)]
+        )
+        run_grants_pipeline_merge(
+            spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir, TEST_CONFIG
+        )
+        assert _commit_entries(ckpt) == list(range(k + 1))
+    assert has_grant(spark, grants_dir, 1, "message") is False  # 4 errors
+
+    # Three upserts per store leave more than one live version to read.
+    assert len(set(ss._read_manifest(grants_dir).values())) > 1
+    for path in (grants_dir, aggstate_dir):
+        jobs, df = jobs_launched(lambda: ss.read_store(spark, path))
+        assert jobs == 0
+        assert df.count() > 0
+
+    version = ss.current_version(grants_dir)
+    manifest = os.path.join(grants_dir, f"manifest_v{version}.json")
+    with open(manifest) as f:
+        doc = json.load(f)
+    del doc["schema"]
+    with open(manifest, "w") as f:
+        json.dump(doc, f)
+    with pytest.raises(ValueError, match="schema"):
+        ss.read_store(spark, grants_dir)
+
+
+def test_deferred_dedup_eviction_is_delayed_never_lost(spark, tmp_path):
+    """Dedup-state eviction runs in data micro-batches only. With a
+    1-hour watermark and catch-ups 3 hours of event time apart, a
+    catch-up's keys leave the dedup state in the second catch-up after
+    it (one catch-up later than a no-data batch would evict them), and
+    duplicates re-landed inside the window are still dropped."""
+    events_dir, grants_dir, notes_dir, ckpt = _paths(tmp_path)
+    aggstate_dir = str(tmp_path / "aggstate")
+    hours = dt.timedelta(hours=3)
+    landings = [
+        [(1, 1, "error", None), (2, 2, "error", None)],
+        [(3, 1, "purchase", 1.0)],
+        [(4, 2, "purchase", 2.0)],
+        [(5, 1, "error", None)],
+    ]
+    # Duplicates re-landed with their original event time, inside the
+    # window: event 1 with catch-up 1, event 3 with catch-up 2.
+    duplicates = {1: ([(1, 1, "error", None)], T0), 2: ([(3, 1, "purchase", 1.0)], T0 + hours)}
+    state_keys = []
+    for k, rows in enumerate(landings):
+        _write_events(spark, events_dir, rows, ts=T0 + k * hours)
+        if k in duplicates:
+            dup_rows, dup_ts = duplicates[k]
+            _write_events(spark, events_dir, dup_rows, ts=dup_ts)
+        run_grants_pipeline_merge(
+            spark, events_dir, grants_dir, notes_dir, ckpt, aggstate_dir,
+            TEST_CONFIG, dedup_watermark="1 hour", shuffle_partitions=2,
+        )
+        state = spark.read.format("statestore").load(ckpt)
+        state_keys.append(sorted(r.event_id for r in state.select("key.event_id").collect()))
+
+    # Catch-up k holds the keys of catch-ups k-1 and k: those of k-2
+    # are evicted by catch-up k's batch, whose watermark is the event
+    # time of catch-up k-1 minus one hour.
+    assert state_keys == [[1, 2], [1, 2, 3], [3, 4], [4, 5]]
+    assert len(state_keys[2]) < len(state_keys[1])
+    # Each event counted once: no duplicate re-added errors or cents.
+    agg = {
+        (r.user_id, r.errors, r.spend) for r in ss.snapshot(spark, aggstate_dir).collect()
+    }
+    assert agg == {(1, 2, 100), (2, 1, 200)}
 
 
 DEDUP_CONFIG = EngineConfig(

@@ -331,7 +331,6 @@ BROADCAST_ALLOWLIST: dict[tuple[str, str], str] = {
     ("operators/similarity.py", "probes"): "query workload x nprobe cells",
     ("operators/similarity.py", "cents"): "k x dim centroid table",
     ("operators/similarity.py", "centroids"): "k x dim centroid table",
-    ("streaming/grants_store.py", "sub_map"): "subscription map (bounded)",
     ("queries/streaming_queries.py", "mx"): "1-row terminal-watermark aggregate",
     ("queries/streaming_queries.py", "anchor"): "1-row corpus-epoch scalar (stream-static)",
     ("queries/training_data.py", "mn"): "1-row min-source-count aggregate",
