@@ -654,21 +654,29 @@ def _matrix_dot_udf(base: DataFrame, dim: int = 64):
     a driver-collected, vid-sorted quantized matrix broadcast to the
     Python workers. ``base`` must carry (vid, v) with every id the
     candidate pairs can reference. The collect is a bounded action at
-    plan-construction time (same class as the _scored wrappers'
-    count()), sized by SRP_MATRIX_RERANK_MAX."""
+    plan-construction time: it takes at most SRP_MATRIX_RERANK_MAX + 1
+    rows and raises past the bound. A vector whose length is not
+    ``dim`` raises here, and a candidate id absent from ``base`` raises
+    in the UDF, rather than scoring against another row's vector."""
     from pyspark.sql.types import LongType
 
-    rows = base.select("vid", "v").collect()
+    rows = base.select("vid", "v").limit(SRP_MATRIX_RERANK_MAX + 1).collect()
+    if len(rows) > SRP_MATRIX_RERANK_MAX:
+        raise ValueError(
+            f"matrix re-rank: corpus exceeds SRP_MATRIX_RERANK_MAX="
+            f"{SRP_MATRIX_RERANK_MAX} vectors; use matrix_rerank=False"
+        )
+    bad = [r["vid"] for r in rows if len(r["v"]) != dim]
+    if bad:
+        raise ValueError(
+            f"matrix re-rank: vectors of length != dim={dim} at vid {bad[:5]}"
+        )
     vids = np.array([r["vid"] for r in rows], dtype=np.int64)
     order = np.argsort(vids)
     vids = vids[order]
-    mat = (
-        np.array([r["v"] for r in rows], dtype=np.int64).reshape(
-            len(rows), dim
-        )[order]
-        if rows
-        else np.zeros((0, dim), dtype=np.int64)
-    )
+    mat = np.array([r["v"] for r in rows], dtype=np.int64).reshape(
+        len(rows), dim
+    )[order]
     sc = base.sparkSession.sparkContext
     b_vids, b_mat = sc.broadcast(vids), sc.broadcast(mat)
 
@@ -677,8 +685,13 @@ def _matrix_dot_udf(base: DataFrame, dim: int = 64):
         if len(q) == 0:
             return pd.Series([], dtype="int64")
         vv, m = b_vids.value, b_mat.value
-        qi = np.searchsorted(vv, q.to_numpy())
-        ni = np.searchsorted(vv, nb.to_numpy())
+        ids = np.concatenate([q.to_numpy(), nb.to_numpy()])
+        idx = np.minimum(np.searchsorted(vv, ids), max(len(vv) - 1, 0))
+        if not len(vv) or (vv[idx] != ids).any():
+            raise ValueError(
+                "matrix re-rank: candidate vid absent from the matrix"
+            )
+        qi, ni = idx[: len(q)], idx[len(q) :]
         return pd.Series(np.einsum("ij,ij->i", m[qi], m[ni]))
 
     return dot_ids

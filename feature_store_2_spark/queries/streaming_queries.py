@@ -167,8 +167,8 @@ def _run_grants(spark, sf_dir: str) -> str:
     return root
 
 
-# Decorators apply bottom-up: stream_feature_grants registers first, so
-# the catalog order (and the head ordering derived from it) is unchanged.
+# Decorators apply bottom-up: stream_feature_grants registers first and
+# precedes this alias in the catalog.
 @register(
     "stream_grants_incremental_merge",
     _GRANTS_ORACLE,

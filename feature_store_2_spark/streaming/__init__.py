@@ -26,11 +26,9 @@ from feature_store_2_spark.streaming.breaker import (
 from feature_store_2_spark.streaming.grants_store import (
     has_grant,
     latest_circuit_open,
-    read_grants,
     read_notifications,
     route_notifications,
     serve_has_grant,
-    upsert_grants,
 )
 from feature_store_2_spark.streaming.sharded_store import snapshot as grants_snapshot
 
@@ -39,10 +37,8 @@ __all__ = [
     "run_grants_pipeline_merge",
     "streaming_denial_rate",
     "streaming_denial_rate_exact",
-    "read_grants",
     "read_notifications",
     "route_notifications",
-    "upsert_grants",
     "has_grant",
     "latest_circuit_open",
     "serve_has_grant",

@@ -8,29 +8,21 @@ Reference parity: ``UserFeatureService._grants`` is an in-heap
 serving path is a point lookup with circuit fail-open
 (app.py:63-79, services/user_feature.py:46-55).
 
-Two storage layers live behind this module:
+Storage is the SHARDED store (sharded_store.py):
+``run_grants_pipeline_merge`` writes it and ``has_grant``/
+``serve_has_grant`` read it. It is an incremental MERGE (manifest log,
+touched-shard rewrites, retention/time travel), the Delta/Iceberg-shaped
+path that survives 100 TB. Lookups read the key's rows of one shard
+driver-side with Arrow, so serving launches no Spark job.
 
-* the SHARDED store (sharded_store.py) — what ``run_grants_pipeline_merge``
-  writes and ``has_grant``/``serve_has_grant`` read: incremental MERGE
-  (manifest log, touched-shard rewrites, retention/time travel), the
-  Delta/Iceberg-shaped path that survives 100 TB. Lookups read the
-  key's rows of one shard driver-side with Arrow, so serving launches
-  no Spark job;
-* a plain versioned-parquet store (``upsert_grants``/``read_grants``
-  below, ``v0``, ``v1``, ... + a ``_LATEST`` pointer written last) —
-  the minimal whole-table MERGE kept as the simple reference
-  implementation the sharded store is equivalence-tested against.
-
-This container has no Delta Lake; on a real deployment both collapse to
-one ``MERGE INTO grants`` on a Delta/Iceberg table clustered by user_id —
-the upsert below is the same left-anti + union plan Delta's MERGE lowers
-to, minus the transaction log.
+The package does not depend on Delta Lake; on a real deployment the
+store is one ``MERGE INTO grants`` on a Delta/Iceberg table clustered by
+user_id.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,56 +39,6 @@ DEFAULT_SUBSCRIBERS: dict[str, tuple[str, ...]] = {
     "access_granted": ("https://api.example.com/event",),
     "access_revoked": ("https://api.example.com/event",),
 }
-
-
-def _latest_path(path: str) -> str:
-    return os.path.join(path, "_LATEST")
-
-
-def _version_dir(path: str, version: int) -> str:
-    return os.path.join(path, f"v{version}")
-
-
-def current_version(path: str) -> int | None:
-    try:
-        with open(_latest_path(path)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
-def read_grants(spark: SparkSession, path: str) -> DataFrame | None:
-    """Latest committed grants snapshot (user_id, feature, has_grant)."""
-    version = current_version(path)
-    if version is None:
-        return None
-    return spark.read.parquet(_version_dir(path, version))
-
-
-def upsert_grants(new: DataFrame, path: str) -> None:
-    """MERGE-style upsert: rows matching on (user_id, feature) are
-    replaced, everything else is carried forward. Writes a new version
-    dir and commits by swapping the ``_LATEST`` pointer (atomic on a
-    local FS; Delta MERGE in production)."""
-    spark = new.sparkSession
-    old = read_grants(spark, path)
-    merged = (
-        new
-        if old is None
-        else old.join(new, list(GRANT_KEYS), "left_anti").unionByName(new)
-    )
-    cur = current_version(path)  # NB: may be 0, which is falsy
-    version = (cur if cur is not None else -1) + 1
-    target = _version_dir(path, version)
-    merged.write.mode("overwrite").parquet(target)
-    tmp = _latest_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _latest_path(path))
-    # Retire superseded versions (keep the previous one for readers
-    # mid-scan; a real deployment VACUUMs by retention window).
-    for stale in range(version - 1):
-        shutil.rmtree(_version_dir(path, stale), ignore_errors=True)
 
 
 def grant_changes(new: DataFrame, old: DataFrame | None) -> DataFrame:

@@ -1,25 +1,22 @@
-"""Catalog integrity: loud loading, no duplicates, driver-priority order.
+"""Catalog integrity: loud loading, no duplicates, registration order.
 
-Round-1 lesson: the driver scores entries in registration order with a
-per-round budget (~50), and `except ImportError: pass` could silently
-shrink the catalog. These tests pin both fixes.
+Round-1 lesson: `except ImportError: pass` could silently shrink the
+catalog, so every catalog module imports unconditionally and a
+duplicate name fails at registration. Catalog order is registration
+order, and importing the catalog reads no file outside the package.
 """
 
+import json
 import os
+import subprocess
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from feature_store_2_spark.queries import (
-    CATALOG,
-    _HEAD_SIZE,
-    _PINNED_RESCORE,
-    _STAPLES,
-    _derive_head,
-    _scored_rounds,
-)
+from feature_store_2_spark.queries import CATALOG  # noqa: E402
 
 
 def test_catalog_size():
@@ -32,89 +29,74 @@ def test_no_duplicate_names():
     assert len(names) == len(set(names))
 
 
-def test_derived_head_leads_catalog():
-    names = [q.name for q in CATALOG]
-    # _derive_head is NOT order-stable on the reordered CATALOG, so
-    # reconstruct from the same inputs _load_all used: the head must be a
-    # permutation-free prefix of the catalog.
-    head = names[:_HEAD_SIZE]
-    assert len(head) == min(_HEAD_SIZE, len(names))
+# Imports the catalog with every `register` call and every file open
+# recorded, then prints what it saw as one JSON line.
+_IMPORT_PROBE = """
+import json, os, sys
 
+opened, registered = [], []
 
-def test_never_scored_entries_lead_head():
-    """Head contract (r4 verdict, amended r5 and r8): staples lead
-    (drift canaries can never be pushed past the driver budget by a
-    large batch of new entries), then changed-code pins (a shipped fix
-    must earn its driver row the round it ships), then every
-    never-scored entry in registration order ahead of every scored
-    non-staple non-pin, then stalest re-scores. A never-scored
-    overflow past the budget defers exactly one round (it stays
-    never-scored and auto-promotes)."""
-    scored = _scored_rounds()
-    names = [q.name for q in CATALOG]
-    priority = set(_STAPLES) | set(_PINNED_RESCORE)
-    never = [n for n in names if n not in scored]
-    # staples are all in the head and ahead of everything else
-    for i, s_name in enumerate(_STAPLES):
-        assert names.index(s_name) < len(_STAPLES)
-    # pins follow immediately after the staples
-    n_lead = len(set(_STAPLES) | set(_PINNED_RESCORE))
-    for p in _PINNED_RESCORE:
-        assert names.index(p) < n_lead, f"pin {p} not directly after staples"
-    # never-scored entries come before every scored non-priority entry
-    first_scored_rest = min(
-        (names.index(n) for n in names if n in scored and n not in priority),
-        default=len(names),
-    )
-    for n in never:
-        if n in priority:
-            continue
-        assert names.index(n) < first_scored_rest, (
-            f"never-scored {n} sorted after a scored non-staple entry"
+def audit(event, args):
+    if event == "open" and isinstance(args[0], (str, bytes, os.PathLike)):
+        opened.append(os.path.abspath(os.fsdecode(args[0])))
+
+def profile(frame, event, arg):
+    if event == "call" and frame.f_code.co_name == "deco" and (
+        frame.f_globals.get("__name__") == "feature_store_2_spark.queries"
+    ):
+        registered.append(
+            (frame.f_locals["name"], frame.f_back.f_globals["__name__"])
         )
 
+import pyspark.sql  # noqa: F401  (keeps the profiled import short)
 
-def test_derive_head_promotes_unscored():
-    """Pure-function check: a hypothetical brand-new entry must lead,
-    and never-scored entries queue FIFO by first-registered round (an
-    older round's unscored entries outrank this round's additions
-    regardless of module import position)."""
-    from feature_store_2_spark.queries import _registered_rounds
-
-    names = [q.name for q in CATALOG]
-    head = _derive_head(names)
-    assert len(head) <= max(_HEAD_SIZE, len(head))
-    scored = _scored_rounds()
-    priority = set(_STAPLES) | set(_PINNED_RESCORE)
-    reg = _registered_rounds()
-    order = {n: i for i, n in enumerate(names)}
-    never = sorted(
-        (n for n in names if n not in scored and n not in priority),
-        key=lambda n: (reg.get(n, 1 << 30), order[n]),
-    )
-    n_staples = len([s_ for s_ in _STAPLES if s_ in names])
-    assert head[:n_staples] == [s_ for s_ in _STAPLES if s_ in names]
-    pins = [
-        p for p in _PINNED_RESCORE if p in names and p not in set(_STAPLES)
-    ]
-    assert head[n_staples : n_staples + len(pins)] == pins
-    n_lead = n_staples + len(pins)
-    assert head[n_lead : n_lead + len(never)] == never
+sys.addaudithook(audit)
+sys.setprofile(profile)
+import feature_store_2_spark.queries as Q
+sys.setprofile(None)
+print(json.dumps({
+    "names": [q.name for q in Q.CATALOG],
+    "registered": registered,
+    "modules": list(Q._MODULES),
+    "opened": opened,
+}))
+"""
 
 
-def test_catalog_rounds_covers_catalog():
-    """catalog_rounds.json (the FIFO key for never-scored head order)
-    must cover every entry and carry nothing stale — run
-    tools/update_catalog_rounds.py after registering entries."""
-    from feature_store_2_spark.queries import _registered_rounds
-
-    reg = _registered_rounds()
-    names = {q.name for q in CATALOG}
-    missing = sorted(names - set(reg))
-    stale = sorted(set(reg) - names)
-    assert not missing, f"run tools/update_catalog_rounds.py: {missing}"
-    assert not stale, f"stale names in catalog_rounds.json: {stale}"
-    assert all(isinstance(v, int) and v >= 1 for v in reg.values())
+def test_catalog_order_is_registration_order(tmp_path):
+    """Two fresh imports, each from a different cwd and hash seed, give
+    the same order; that order is the order `register` ran, which is
+    `_MODULES` order and then decorator order within each module; and
+    the import opens no repo file outside the package (no scoring
+    artifact at the repo root steers it)."""
+    runs = []
+    for seed in ("0", "4242"):
+        cwd = tmp_path / f"cwd{seed}"
+        cwd.mkdir()
+        env = dict(os.environ, PYTHONHASHSEED=seed, PYTHONPATH=ROOT)
+        proc = subprocess.run(
+            [sys.executable, "-c", _IMPORT_PROBE],
+            cwd=cwd, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr
+        runs.append(json.loads(proc.stdout.strip().splitlines()[-1]))
+    a, b = runs
+    assert a["names"] == b["names"]
+    assert len(a["names"]) == len(CATALOG)
+    assert a["names"] == [name for name, _ in a["registered"]]
+    prefix = "feature_store_2_spark.queries."
+    module_runs = []
+    for _, module in a["registered"]:
+        if not module_runs or module_runs[-1] != module:
+            module_runs.append(module)
+    assert module_runs == [prefix + m for m in a["modules"]]
+    package = os.path.join(ROOT, "feature_store_2_spark") + os.sep
+    for run in runs:
+        outside = [
+            p for p in run["opened"]
+            if p.startswith(ROOT + os.sep) and not p.startswith(package)
+        ]
+        assert not outside, outside
 
 
 def test_every_entry_has_fn_and_doc():
@@ -125,10 +107,9 @@ def test_every_entry_has_fn_and_doc():
 
 # Environment-drift canary (round-2 lesson): pyspark 4.1.2 changed how
 # the events parquet's timestamps resolve (TIMESTAMP_NTZ), and three
-# entries that had rotated OUT of the driver-scored head crashed at
-# analysis time with nobody watching. Analyzing every entry's plan at
-# sf0.001 catches any such runtime drift across the whole catalog in CI,
-# not just the scored head. Batch entries only touch .schema (analysis,
+# entries nobody was running crashed at analysis time. Analyzing every
+# entry's plan at sf0.001 catches any such runtime drift across the
+# whole catalog in CI. Batch entries only touch .schema (analysis,
 # no job); streaming entries execute their pipeline when called, which
 # is the only way to analyze them — still cheap at sf0.001.
 _BATCH_ENTRIES = [q.name for q in CATALOG if not q.name.startswith("stream")]
@@ -139,14 +120,6 @@ def test_entry_analyzes(spark, sf_dir, name):
     q = next(q for q in CATALOG if q.name == name)
     schema = q.fn(spark, sf_dir).schema
     assert len(schema.fields) > 0, name
-
-
-def test_staple_names_registered():
-    """A typo in _STAPLES breaks head derivation — every staple must be
-    a real catalog entry (also enforced loudly at import)."""
-    names = {q.name for q in CATALOG}
-    missing = [n for n in _STAPLES if n not in names]
-    assert not missing, missing
 
 
 def test_bench_headline_names_registered():

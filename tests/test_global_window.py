@@ -168,10 +168,12 @@ def test_nulls_last_matches_desc_window(spark):
     assert g == e
 
 
-def test_compact_gate_matches_bucketed(spark, monkeypatch):
+def test_compact_gate_matches_bucketed(spark, monkeypatch, tmp_path):
     """GW_PLAIN_WINDOW_MAX_BYTES routes compact inputs to the plain
     window; both routes must emit identical values on the adversarial
-    keysets (incl. nulls and partition columns)."""
+    keysets (incl. nulls and partition columns). Each frame's analyzed
+    plan shows which route it took, so a gate that sends both sides the
+    same way fails here."""
     rng = random.Random(17)
     rows = [
         Row(
@@ -183,10 +185,16 @@ def test_compact_gate_matches_bucketed(spark, monkeypatch):
         for i in range(500)
     ]
     df = spark.createDataFrame(rows, "g string, k int, uid int, v int")
+    # The gate reads Catalyst's size estimate, and an in-memory frame
+    # has none (it reads as Long.MaxValue, i.e. unknown): the plain
+    # route gets the same rows read back from parquet.
+    df.write.parquet(str(tmp_path / "keys"))
+    on_disk = spark.read.parquet(str(tmp_path / "keys"))
+    analyzed = lambda d: d._jdf.queryExecution().analyzed().toString()  # noqa: E731
     for nulls in ("first", "last"):
         monkeypatch.setattr(gw, "GW_PLAIN_WINDOW_MAX_BYTES", 1 << 40)
         plain = gw.bucketed_running_sums(
-            df, "k", ["k", "uid"], [(F.col("v").cast("long"), "run")],
+            on_disk, "k", ["k", "uid"], [(F.col("v").cast("long"), "run")],
             partition_cols=["g"], n_buckets=6, nulls=nulls,
         )
         p = {r["uid"]: r["run"] for r in plain.select("uid", "run").collect()}
@@ -197,6 +205,8 @@ def test_compact_gate_matches_bucketed(spark, monkeypatch):
         )
         b = {r["uid"]: r["run"] for r in bucketed.select("uid", "run").collect()}
         assert p == b and len(p) == 500
+        assert "_gw_bucket" not in analyzed(plain)
+        assert "_gw_bucket" in analyzed(bucketed)
 
 
 def test_ntile_closed_form_all_small_n(spark):

@@ -235,6 +235,51 @@ def test_srp_matrix_rerank_value_parity(spark, sf_dir):
     assert jvm_knn == mat_knn and jvm_knn
 
 
+def _matrix_base(spark, rows):
+    return spark.createDataFrame(rows, "vid long, v array<long>")
+
+
+def test_srp_matrix_rerank_rejects_absent_ids(spark):
+    """A candidate id missing from the matrix raises, whether it falls
+    between two present ids (searchsorted would gather the next row's
+    vector) or past the last one (it would index out of range)."""
+    from feature_store_2_spark.operators.dedup import _matrix_dot_udf
+
+    dot_ids = _matrix_dot_udf(
+        _matrix_base(spark, [(10, [1, 2]), (20, [3, 4]), (30, [5, 6])]), dim=2
+    )
+    pairs = lambda rows: spark.createDataFrame(rows, "q long, nb long")  # noqa: E731
+    ok = pairs([(10, 30), (20, 20)]).select(dot_ids("q", "nb").alias("d"))
+    assert [r["d"] for r in ok.collect()] == [1 * 5 + 2 * 6, 3 * 3 + 4 * 4]
+    for bad in ([(10, 15)], [(99, 10)], [(10, 5)]):
+        with pytest.raises(Exception, match="absent from the matrix"):
+            pairs(bad).select(dot_ids("q", "nb")).collect()
+
+
+def test_srp_matrix_rerank_rejects_wrong_length_vectors(spark):
+    """Vectors of a constant length other than ``dim`` would reshape
+    into misaligned rows; the builder raises instead."""
+    from feature_store_2_spark.operators.dedup import _matrix_dot_udf
+
+    base = _matrix_base(spark, [(1, [1, 2, 3]), (2, [4, 5, 6])])
+    with pytest.raises(ValueError, match="length != dim=2"):
+        _matrix_dot_udf(base, dim=2)
+
+
+def test_srp_matrix_rerank_bounds_the_collect(spark, monkeypatch):
+    """A direct ``matrix_rerank=True`` caller cannot collect a corpus
+    past SRP_MATRIX_RERANK_MAX: the builder takes at most one row past
+    the bound and raises."""
+    from feature_store_2_spark.operators import dedup
+
+    base = _matrix_base(spark, [(i, [i, i]) for i in range(5)])
+    monkeypatch.setattr(dedup, "SRP_MATRIX_RERANK_MAX", 5)
+    dedup._matrix_dot_udf(base, dim=2)
+    monkeypatch.setattr(dedup, "SRP_MATRIX_RERANK_MAX", 4)
+    with pytest.raises(ValueError, match="exceeds SRP_MATRIX_RERANK_MAX=4"):
+        dedup._matrix_dot_udf(base, dim=2)
+
+
 def test_brute_force_topk_ranks_identical_vector_first(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),

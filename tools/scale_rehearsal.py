@@ -35,7 +35,7 @@ sys.path.insert(0, ROOT)
 from pyspark.sql import functions as F  # noqa: E402
 
 from feature_store_2_spark.session import get_spark  # noqa: E402
-from feature_store_2_spark.queries import CATALOG, _load_all  # noqa: E402
+from feature_store_2_spark.queries import CATALOG  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 REPLICATED = ("events", "lineitem", "documents", "embeddings")
@@ -319,7 +319,6 @@ def main() -> int:
     factors = [int(x) for x in sys.argv[1:] if x.isdigit()] or [1, 3, 10]
     only = {x for x in sys.argv[1:] if not x.isdigit()}
     entries = tuple(e for e in ENTRIES if not only or e in only)
-    _load_all()
     by = {d.name: d for d in CATALOG}
     spark = get_spark("fs2-scale-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
